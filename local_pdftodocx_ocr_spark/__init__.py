@@ -14,7 +14,7 @@ Layout:
   synth      - deterministic synthetic interleaved corpora
   catalog    - snapshot-commit table I/O (Iceberg-style manifest on parquet)
   job        - the distributed extraction job (salted repartition ->
-               mapInPandas -> spans + lineage, idempotent resume)
+               mapInArrow -> spans + lineage, idempotent resume)
   operators/ - relational, dedup, similarity, textstats, multimodal
   streaming/ - structured-streaming analogs (windowed event aggregation)
 """

@@ -17,7 +17,9 @@ the same *semantics* behind a thin seam (SURVEY.md §7.1 "Iceberg note"):
 Scale notes: readers get the committed file list (partition pruning and
 column pruning still apply — resume reads only the ``doc_id`` column);
 the resume anti-join is the only cluster-wide join in the engine
-(SURVEY.md §2.3).
+(SURVEY.md §2.3). Readers that know the table's schema pass it, so a
+read launches no parquet schema-inference job; :class:`IcebergTable`
+ignores it, since Iceberg metadata carries the schema.
 """
 
 from __future__ import annotations
@@ -30,8 +32,16 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _MANIFEST = "_manifest.json"
+
+
+def _read_parquet(spark: SparkSession, paths: list[str],
+                  schema: StructType | None) -> DataFrame:
+    """A known schema skips the parquet footer-inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 class SnapshotTable:
@@ -105,11 +115,12 @@ class SnapshotTable:
     def committed_paths(self) -> list[str]:
         return [s["path"] for s in self.snapshots()]
 
-    def read(self, spark: SparkSession) -> DataFrame | None:
+    def read(self, spark: SparkSession,
+             schema: StructType | None = None) -> DataFrame | None:
         paths = self.committed_paths()
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return _read_parquet(spark, paths, schema)
 
     def read_at(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
         """Time travel: the table AS OF `snapshot_id` — the union of all
@@ -123,20 +134,25 @@ class SnapshotTable:
                 return spark.read.parquet(*paths)
         raise KeyError(f"unknown snapshot {snapshot_id!r}")
 
-    def committed_doc_ids(self, spark: SparkSession) -> DataFrame | None:
+    def committed_doc_ids(self, spark: SparkSession,
+                          schema: StructType | None = None) -> DataFrame | None:
         """doc_id column only (parquet column pruning) from committed
-        snapshots — the left side of the resume anti-join."""
-        df = self.read(spark)
+        snapshots — the right side of the resume anti-join. Not
+        de-duplicated: an anti-join's result does not depend on
+        duplicate keys on its right side, and a distinct would cost a
+        shuffle."""
+        df = self.read(spark, schema)
         if df is None:
             return None
         return (df.filter(F.col("row_type").isin("doc", "quarantine"))
-                .select("doc_id").distinct())
+                .select("doc_id"))
 
-    def read_snapshot(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
+    def read_snapshot(self, spark: SparkSession, snapshot_id: str,
+                      schema: StructType | None = None) -> DataFrame:
         """ONLY the rows committed by `snapshot_id`."""
         for s in self.snapshots():
             if s["id"] == snapshot_id:
-                return spark.read.parquet(s["path"])
+                return _read_parquet(spark, [s["path"]], schema)
         raise KeyError(f"unknown snapshot {snapshot_id!r}")
 
 
@@ -257,7 +273,8 @@ class IcebergTable:
 
     # -- read path ----------------------------------------------------------
 
-    def read(self, spark: SparkSession | None = None) -> DataFrame | None:
+    def read(self, spark: SparkSession | None = None,
+             schema: StructType | None = None) -> DataFrame | None:
         if not self.snapshots():
             return None
         return (spark or self.spark).table(self.identifier)
@@ -270,14 +287,16 @@ class IcebergTable:
                         .table(self.identifier))
         raise KeyError(f"unknown snapshot {snapshot_id!r}")
 
-    def committed_doc_ids(self, spark: SparkSession) -> DataFrame | None:
+    def committed_doc_ids(self, spark: SparkSession,
+                          schema: StructType | None = None) -> DataFrame | None:
         df = self.read(spark)
         if df is None:
             return None
         return (df.filter(F.col("row_type").isin("doc", "quarantine"))
-                .select("doc_id").distinct())
+                .select("doc_id"))
 
-    def read_snapshot(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
+    def read_snapshot(self, spark: SparkSession, snapshot_id: str,
+                      schema: StructType | None = None) -> DataFrame:
         """ONLY the rows committed by `snapshot_id` (Iceberg incremental
         append scan between the previous snapshot and this one)."""
         snaps = self.snapshots()

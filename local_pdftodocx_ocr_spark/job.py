@@ -4,20 +4,28 @@ Physical plan (designed for 1000 executors / 100 TB; tested on local[N]):
 
   read input (doc_id, spans)                 -- Iceberg/parquet scan;
                                                 column-pruned, snapshot-based
-  [resume] LEFT ANTI JOIN committed doc_ids  -- the only cluster-wide join
+  [resume] LEFT ANTI JOIN committed doc_ids  -- the only cluster-wide join;
+                                                committed ids are read with
+                                                the known unified schema
+                                                (no inference job)
   repartition(P, xxhash64(doc_id, salt))     -- salted hash defuses
                                                 large-document key skew
                                                 (north rule; SURVEY.md §2.9 R1)
-  mapInPandas(extract_batch)                 -- ONE Arrow-batched pass:
+  mapInArrow(extract_batch)                  -- ONE Arrow-batched pass:
                                                 route/clean/recognize/dedup/
                                                 order kernels per document,
                                                 one batched recognize call
-                                                per Arrow batch, plus one
+                                                per record batch, plus one
                                                 lineage row per partition
   write parquet snapshot -> atomic commit    -- idempotent restart point
+  collect the P lineage rows                 -- ONE Spark job; docs_in/out
+                                                and the checksum fold are
+                                                summed on the driver
 
 No per-row Python anywhere: documents cross the Python boundary once, as
-Arrow record batches; everything else is JVM-side.
+Arrow record batches, and come back as record batches built directly
+against the unified schema (no pandas frames); everything else is
+JVM-side.
 """
 
 from __future__ import annotations
@@ -27,15 +35,20 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import kernels
 from .catalog import open_table
 from .schema import DOCS_SCHEMA, UNIFIED_SCHEMA
 
 DEFAULT_SALT = 0x5CA1AB1E
+_UNIFIED_ARROW = to_arrow_schema(UNIFIED_SCHEMA)
+_DOCS_ARROW = to_arrow_schema(DOCS_SCHEMA)
 
 
 def build_session(parallelism: int = 0, app: str = "pdf2spans",
@@ -64,76 +77,68 @@ def build_session(parallelism: int = 0, app: str = "pdf2spans",
     )
 
 
-def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body. Per Arrow batch: one recognize_batch call over
-    every media_ref in the batch (the batched "OCR" step, reference
-    src/ocr_engine.py:899-954), then the per-document kernel pipeline.
-    After the partition drains, emit exactly one lineage row."""
+def _record_batch(schema: pa.Schema, **cols: list) -> pa.RecordBatch:
+    """A record batch of `schema` from Python columns; the columns not
+    given are all null."""
+    n = len(next(iter(cols.values())))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[f.name], f.type) if f.name in cols else pa.nulls(n, f.type)
+         for f in schema], schema=schema)
+
+
+def _recognized(spans_col: list) -> dict[str, str]:
+    """The batched "OCR" step (reference src/ocr_engine.py:899-954): one
+    recognize_batch call over every distinct media_ref of a record batch."""
+    refs = sorted({s["media_ref"] for spans in spans_col if spans
+                   for s in spans if s["media_ref"]})
+    return dict(zip(refs, kernels.recognize_batch(refs)))
+
+
+def _unified_rows(results: Iterator[list[tuple]],
+                  partition_offset: int = 0) -> Iterator[pa.RecordBatch]:
+    """The one emitter of unified rows. `results` yields, per input
+    batch, a list of ``(doc_id, spans, checksum)``. A doc with spans
+    becomes a doc row; a doc whose extraction came out empty becomes a
+    quarantine row (null spans), which marks it processed so resume
+    skips it without polluting the spans table. After the partition
+    drains, exactly one lineage row follows."""
     ctx = TaskContext.get()
-    partition_id = ctx.partitionId() if ctx is not None else -1
+    partition_id = (ctx.partitionId() if ctx is not None else -1) + partition_offset
     t0 = time.monotonic()
-    docs_in = 0
-    docs_out = 0
-    checksum_acc = 0
+    docs_in = docs_out = acc = 0
+    for rows in results:
+        docs_in += len(rows)
+        for _, spans, chk in rows:
+            if spans:
+                docs_out += 1
+                acc = (acc + chk) % kernels._CHECK_MOD
+        yield _record_batch(
+            _UNIFIED_ARROW,
+            row_type=["doc" if spans else "quarantine" for _, spans, _ in rows],
+            doc_id=[doc_id for doc_id, _, _ in rows],
+            spans=[spans or None for _, spans, _ in rows])
+    yield _record_batch(
+        _UNIFIED_ARROW, row_type=["lineage"], partition_id=[partition_id],
+        docs_in=[docs_in], docs_out=[docs_out], checksum=[format(acc, "016x")],
+        wall_ms=[int((time.monotonic() - t0) * 1000)])
 
-    for pdf in batches:
-        # ---- batched recognize: collect every media_ref once ----
-        refs: set[str] = set()
-        for spans in pdf["spans"]:
-            if spans is None:
-                continue
-            for s in spans:
-                r = s["media_ref"]
-                if r:
-                    refs.add(r)
-        ref_list = sorted(refs)
-        media_text = dict(zip(ref_list, kernels.recognize_batch(ref_list)))
 
-        out_ids: list[str] = []
-        out_spans: list = []
-        row_types: list[str] = []
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            docs_in += 1
-            # spans pass through untouched (Arrow hands us an ndarray of
-            # dicts; kernels only read) and the output tuples go straight
-            # back to Arrow — no per-span dict materialization in the hot
-            # loop (the round-1 version double-allocated every span).
-            tuples = kernels.extract_document(doc_id, spans, media_text)
-            if not tuples:
-                # quarantine row: marks the doc as processed (so resume
-                # skips it) without polluting the spans table
-                out_ids.append(doc_id)
-                out_spans.append(None)
-                row_types.append("quarantine")
-                continue
-            docs_out += 1
-            checksum_acc = (checksum_acc + kernels.doc_checksum(doc_id, tuples)) % kernels._CHECK_MOD
-            out_ids.append(doc_id)
-            out_spans.append(tuples)
-            row_types.append("doc")
-        n = len(out_ids)
-        yield pd.DataFrame({
-            "row_type": pd.Series(row_types, dtype="object"),
-            "doc_id": pd.Series(out_ids, dtype="object"),
-            "spans": pd.Series(out_spans, dtype="object"),
-            "partition_id": pd.array([None] * n, dtype="Int32"),
-            "docs_in": pd.array([None] * n, dtype="Int64"),
-            "docs_out": pd.array([None] * n, dtype="Int64"),
-            "checksum": pd.Series([None] * n, dtype="object"),
-            "wall_ms": pd.array([None] * n, dtype="Int64"),
-        })
+def extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow body. Per record batch: one batched recognize call,
+    then the per-document kernel pipeline over the spans read as lists
+    of dicts. After the partition drains, exactly one lineage row."""
+    def results() -> Iterator[list[tuple]]:
+        for batch in batches:
+            spans_col = batch.column("spans").to_pylist()
+            media_text = _recognized(spans_col)
+            rows = []
+            for doc_id, spans in zip(batch.column("doc_id").to_pylist(), spans_col):
+                tuples = kernels.extract_document(doc_id, spans, media_text)
+                rows.append((doc_id, tuples,
+                             kernels.doc_checksum(doc_id, tuples) if tuples else 0))
+            yield rows
 
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    yield pd.DataFrame({
-        "row_type": pd.Series(["lineage"], dtype="object"),
-        "doc_id": pd.Series([None], dtype="object"),
-        "spans": pd.Series([None], dtype="object"),
-        "partition_id": pd.array([partition_id], dtype="Int32"),
-        "docs_in": pd.array([docs_in], dtype="Int64"),
-        "docs_out": pd.array([docs_out], dtype="Int64"),
-        "checksum": pd.Series([format(checksum_acc, "016x")], dtype="object"),
-        "wall_ms": pd.array([wall_ms], dtype="Int64"),
-    })
+    return _unified_rows(results())
 
 
 def extract_spans(docs: DataFrame, num_partitions: int | None = None,
@@ -146,7 +151,7 @@ def extract_spans(docs: DataFrame, num_partitions: int | None = None,
     post-shuffle partitions."""
     n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
     salted = docs.repartition(n, F.xxhash64(F.col("doc_id"), F.lit(salt)))
-    return salted.mapInPandas(extract_batch, schema=UNIFIED_SCHEMA)
+    return salted.mapInArrow(extract_batch, schema=UNIFIED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -160,57 +165,56 @@ def extract_spans(docs: DataFrame, num_partitions: int | None = None,
 # with the single-pass path, so outputs are identical (tests pin this).
 # ---------------------------------------------------------------------------
 
-BLOCK_DDL = ("kind string, page int, y double, x double, text string, "
-             "media_ref string, src_offset int, src_kind string, seq long, "
-             "w double, h double")
-_ROUTED_SCHEMA = f"doc_id string, blocks array<struct<{BLOCK_DDL}>>"
+# the Block wire form; field order == kernels.block_to_tuple
+_BLOCK = T.StructType([T.StructField(name, typ) for name, typ in (
+    ("kind", T.StringType()), ("page", T.IntegerType()), ("y", T.DoubleType()),
+    ("x", T.DoubleType()), ("text", T.StringType()), ("media_ref", T.StringType()),
+    ("src_offset", T.IntegerType()), ("src_kind", T.StringType()),
+    ("seq", T.LongType()), ("w", T.DoubleType()), ("h", T.DoubleType()))])
+_ROUTED_SCHEMA = T.StructType([T.StructField("doc_id", T.StringType()),
+                               T.StructField("blocks", T.ArrayType(_BLOCK))])
+_FINALIZED_SCHEMA = T.StructType([UNIFIED_SCHEMA["doc_id"], UNIFIED_SCHEMA["spans"],
+                                  T.StructField("checksum", T.LongType())])
+_ROUTED_ARROW = to_arrow_schema(_ROUTED_SCHEMA)
+_FINALIZED_ARROW = to_arrow_schema(_FINALIZED_SCHEMA)
 _CHUNK_PARTITION_OFFSET = 1_000_000
 
 
-def _route_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        refs: set[str] = set()
-        for spans in pdf["spans"]:
-            if spans is None:
-                continue
-            for s in spans:
-                if s["media_ref"]:
-                    refs.add(s["media_ref"])
-        ref_list = sorted(refs)
-        media_text = dict(zip(ref_list, kernels.recognize_batch(ref_list)))
-
-        ids, blocks_col = [], []
-        for doc_id, base_seq, spans in zip(pdf["doc_id"], pdf["base_seq"], pdf["spans"]):
-            blocks = kernels.route_spans(spans, media_text, int(base_seq))
-            ids.append(doc_id)
-            blocks_col.append([kernels.block_to_tuple(b) for b in blocks])
-        yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="object"),
-                            "blocks": pd.Series(blocks_col, dtype="object")})
+def _route_chunks(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        spans_col = batch.column("spans").to_pylist()
+        media_text = _recognized(spans_col)
+        yield _record_batch(
+            _ROUTED_ARROW, doc_id=batch.column("doc_id").to_pylist(),
+            blocks=[[kernels.block_to_tuple(b)
+                     for b in kernels.route_spans(spans, media_text, base_seq)]
+                    for base_seq, spans in zip(batch.column("base_seq").to_pylist(),
+                                               spans_col)])
 
 
-def _finalize_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    doc_id = pdf["doc_id"].iloc[0]
-    blocks: list = []
-    for chunk in pdf["blocks"]:
-        if chunk is not None:
-            blocks.extend(kernels.block_from_dict(b) for b in chunk)
+def _finalize_group(table: pa.Table) -> pa.Table:
+    doc_id = table.column("doc_id")[0].as_py()
+    blocks = [kernels.block_from_dict(b)
+              for chunk in table.column("blocks").to_pylist() if chunk for b in chunk]
     blocks.sort(key=lambda b: b.seq)  # restore the single-pass routing order
     tuples = kernels.finalize_blocks(blocks)
-    if not tuples:
-        return pd.DataFrame({"doc_id": pd.Series([doc_id], dtype="object"),
-                             "spans": pd.Series([None], dtype="object"),
-                             "checksum": pd.Series([None], dtype="object")})
-    chk = kernels.doc_checksum(doc_id, tuples)
-    return pd.DataFrame({"doc_id": pd.Series([doc_id], dtype="object"),
-                         "spans": pd.Series([tuples], dtype="object"),
-                         "checksum": pd.Series([format(chk, '016x')], dtype="object")})
+    chk = kernels.doc_checksum(doc_id, tuples) if tuples else 0
+    return pa.Table.from_batches([_record_batch(
+        _FINALIZED_ARROW, doc_id=[doc_id], spans=[tuples or None], checksum=[chk])])
+
+
+def _finalized_to_unified(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    return _unified_rows(
+        (list(zip(b.column("doc_id").to_pylist(), b.column("spans").to_pylist(),
+                  b.column("checksum").to_pylist())) for b in batches),
+        _CHUNK_PARTITION_OFFSET)
 
 
 def extract_spans_chunked(fat_docs: DataFrame, chunk_threshold: int) -> DataFrame:
     """(doc_id, spans) of oversized docs -> unified rows via the
     chunked two-phase plan: explode to span-chunks (pure JVM slice) ->
-    route per chunk (mapInPandas) -> groupBy(doc_id) finalize
-    (applyInPandas). Lineage rows come from the finalize stage with
+    route per chunk (mapInArrow) -> groupBy(doc_id) finalize
+    (applyInArrow). Lineage rows come from the finalize stage with
     partition ids offset to stay disjoint from the single-pass path."""
     n_chunks = F.ceil(F.size("spans") / F.lit(chunk_threshold)).cast("int")
     chunks = (fat_docs
@@ -221,54 +225,10 @@ def extract_spans_chunked(fat_docs: DataFrame, chunk_threshold: int) -> DataFram
                       (F.col("chunk_id").cast("long") * chunk_threshold).alias("base_seq"),
                       F.slice("spans", F.col("chunk_id") * chunk_threshold + 1,
                               F.lit(chunk_threshold)).alias("spans")))
-    routed = chunks.mapInPandas(_route_chunks, schema=_ROUTED_SCHEMA)
-    finalized = routed.groupBy("doc_id").applyInPandas(
-        _finalize_group, schema="doc_id string, spans array<struct<kind string, "
-                                "text string, media_ref string, offset int>>, "
-                                "checksum string")
-
-    def to_unified(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = (ctx.partitionId() if ctx is not None else 0) + _CHUNK_PARTITION_OFFSET
-        t0 = time.monotonic()
-        docs_in = docs_out = 0
-        acc = 0
-        for pdf in batches:
-            rts, ids, spans_col = [], [], []
-            for doc_id, spans, chk in zip(pdf["doc_id"], pdf["spans"], pdf["checksum"]):
-                docs_in += 1
-                ids.append(doc_id)
-                if spans is None:
-                    rts.append("quarantine")
-                    spans_col.append(None)
-                else:
-                    docs_out += 1
-                    acc = (acc + int(chk, 16)) % kernels._CHECK_MOD
-                    rts.append("doc")
-                    spans_col.append(spans)
-            n = len(ids)
-            yield pd.DataFrame({
-                "row_type": pd.Series(rts, dtype="object"),
-                "doc_id": pd.Series(ids, dtype="object"),
-                "spans": pd.Series(spans_col, dtype="object"),
-                "partition_id": pd.array([None] * n, dtype="Int32"),
-                "docs_in": pd.array([None] * n, dtype="Int64"),
-                "docs_out": pd.array([None] * n, dtype="Int64"),
-                "checksum": pd.Series([None] * n, dtype="object"),
-                "wall_ms": pd.array([None] * n, dtype="Int64"),
-            })
-        yield pd.DataFrame({
-            "row_type": pd.Series(["lineage"], dtype="object"),
-            "doc_id": pd.Series([None], dtype="object"),
-            "spans": pd.Series([None], dtype="object"),
-            "partition_id": pd.array([pid], dtype="Int32"),
-            "docs_in": pd.array([docs_in], dtype="Int64"),
-            "docs_out": pd.array([docs_out], dtype="Int64"),
-            "checksum": pd.Series([format(acc, "016x")], dtype="object"),
-            "wall_ms": pd.array([int((time.monotonic() - t0) * 1000)], dtype="Int64"),
-        })
-
-    return finalized.mapInPandas(to_unified, schema=UNIFIED_SCHEMA)
+    routed = chunks.mapInArrow(_route_chunks, schema=_ROUTED_SCHEMA)
+    finalized = routed.groupBy("doc_id").applyInArrow(
+        _finalize_group, schema=_FINALIZED_SCHEMA)
+    return finalized.mapInArrow(_finalized_to_unified, schema=UNIFIED_SCHEMA)
 
 
 def extract_spans_auto(docs: DataFrame, num_partitions: int | None = None,
@@ -292,6 +252,22 @@ def split_unified(unified: DataFrame) -> tuple[DataFrame, DataFrame]:
     return spans, lineage
 
 
+def snapshot_totals(spark: SparkSession, table, snapshot_id: str) -> dict:
+    """One committed extraction snapshot's totals in ONE Spark job: its
+    P lineage rows are collected once (read with the known schema, so
+    no inference job) and summed and checksum-folded on the driver."""
+    rows = (table.read_snapshot(spark, snapshot_id, UNIFIED_SCHEMA)
+            .filter(F.col("row_type") == "lineage")
+            .select("docs_in", "docs_out", "checksum").collect())
+    return {
+        "snapshot": snapshot_id,
+        "docs_in": sum(r["docs_in"] for r in rows),
+        "docs_out": sum(r["docs_out"] for r in rows),
+        "partitions": len(rows),
+        "checksum": kernels.combine_checksums(int(r["checksum"], 16) for r in rows),
+    }
+
+
 def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
             resume: bool = True, num_partitions: int | None = None,
             chunk_threshold: int | None = None) -> dict:
@@ -307,7 +283,7 @@ def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
     backends satisfy the same contract (tests/test_catalog_contract)."""
     table = open_table(spark, out_root)
     if resume:
-        done = table.committed_doc_ids(spark)
+        done = table.committed_doc_ids(spark, UNIFIED_SCHEMA)
         if done is not None:
             docs = docs.join(done, "doc_id", "left_anti")
 
@@ -323,27 +299,13 @@ def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
         table.abort(staging)
         raise
     table.commit(snap_id, staging, meta={"kind": "extract"})
-
-    lineage = (table.read_snapshot(spark, snap_id)
-               .filter(F.col("row_type") == "lineage"))
-    stats = (lineage.agg(F.sum("docs_in").alias("docs_in"),
-                         F.sum("docs_out").alias("docs_out"),
-                         F.count("*").alias("partitions"))
-             .collect()[0])
-    checks = [int(r["checksum"], 16) for r in lineage.select("checksum").collect()]
-    return {
-        "snapshot": snap_id,
-        "docs_in": stats["docs_in"] or 0,
-        "docs_out": stats["docs_out"] or 0,
-        "partitions": stats["partitions"],
-        "checksum": kernels.combine_checksums(checks),
-    }
+    return snapshot_totals(spark, table, snap_id)
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:
     """All committed extracted spans (union of snapshots)."""
     table = open_table(spark, out_root)
-    df = table.read(spark)
+    df = table.read(spark, UNIFIED_SCHEMA)
     if df is None:
         return spark.createDataFrame([], DOCS_SCHEMA)
     return split_unified(df)[0]
@@ -351,7 +313,7 @@ def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:
 
 def read_lineage(spark: SparkSession, out_root: str) -> DataFrame:
     table = open_table(spark, out_root)
-    df = table.read(spark)
+    df = table.read(spark, UNIFIED_SCHEMA)
     if df is None:
         raise FileNotFoundError(f"no committed snapshots under {out_root}")
     return split_unified(df)[1]
@@ -489,15 +451,15 @@ def docs_df_from_corpus(spark: SparkSession, corpus: list[tuple[str, list[dict]]
 def interleaved_docs_from_flat(documents: DataFrame) -> DataFrame:
     """Derive the input_hint-shaped corpus from the driver's flat
     ``documents`` table (doc_id:int, text:string) — deterministic synth
-    inside mapInPandas, no external data (synth.spans_from_flat_doc)."""
+    inside mapInArrow, no external data (synth.spans_from_flat_doc)."""
     from . import synth
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, spans_col = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ids.append(f"doc-{int(doc_id):08d}")
-                spans_col.append(synth.spans_from_flat_doc(int(doc_id), text))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans_col})
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ids = [int(i) for i in batch.column("doc_id").to_pylist()]
+            yield _record_batch(
+                _DOCS_ARROW, doc_id=[f"doc-{i:08d}" for i in ids],
+                spans=[synth.spans_from_flat_doc(i, text) for i, text
+                       in zip(ids, batch.column("text").to_pylist())])
 
-    return documents.select("doc_id", "text").mapInPandas(gen, schema=DOCS_SCHEMA)
+    return documents.select("doc_id", "text").mapInArrow(gen, schema=DOCS_SCHEMA)

@@ -4,7 +4,7 @@ These functions are the semantic rebuild of the reference's extraction
 operators (SURVEY.md §2; reference citations inline). They contain NO
 Spark imports: the same code runs
 
-  * inside the Arrow-batched ``mapInPandas`` extraction UDF (job.py), and
+  * inside the Arrow-batched ``mapInArrow`` extraction UDF (job.py), and
   * sequentially on the driver as the test oracle (oracle.py),
 
 so span-sequence equality ``(kind, text, media_ref, offset)`` between the
@@ -1120,10 +1120,6 @@ def _is_near_duplicate_keys(ka: str, kb: str,
     return sm.ratio() >= NEARDUP_RATIO
 
 
-def _is_near_duplicate(a: str, b: str) -> bool:
-    return _is_near_duplicate_keys(text_norm_key(a), text_norm_key(b))
-
-
 def _dedup_page(blocks: list[Block]) -> list[Block]:
     """Per-page dedup, simplified from the reference's
     `_dedup_page_text_blocks` (src/pipeline.py:518-560): exact key dedup
@@ -1540,16 +1536,8 @@ def extract_document(doc_id: str, spans: list[dict],
     return finalize_blocks(route_spans(spans, media_text))
 
 
-def block_to_dict(b: Block) -> dict:
-    """Wire form of an intermediate Block (chunked path shuffle)."""
-    return {"kind": b.kind, "page": b.page, "y": b.y, "x": b.x,
-            "text": b.text, "media_ref": b.media_ref,
-            "src_offset": b.src_offset, "src_kind": b.src_kind,
-            "seq": b.seq, "w": b.w, "h": b.h}
-
-
 def block_to_tuple(b: Block) -> tuple:
-    """Tuple wire form (field order == job.BLOCK_DDL); Arrow accepts
+    """Tuple wire form (field order == job._BLOCK); Arrow accepts
     tuples for struct columns, skipping one dict per block."""
     return (b.kind, b.page, b.y, b.x, b.text, b.media_ref,
             b.src_offset, b.src_kind, b.seq, b.w, b.h)

@@ -36,7 +36,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", out_path: str = "PLANS.md") -> i
     dedup._MAX_LIVE_CACHES = 10_000
 
     targets = {
-        "extraction single-pass (salted repartition -> mapInPandas)":
+        "extraction single-pass (salted repartition -> mapInArrow)":
             job.extract_spans(job.docs_df_from_corpus(spark, synth.gen_corpus(10)),
                               num_partitions=4),
         "q1_pricing_summary": relational.q1_pricing_summary(spark, sf_dir),

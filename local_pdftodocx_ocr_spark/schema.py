@@ -39,8 +39,9 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 # Unified schema emitted by the single-pass extraction UDF; rows are
-# routed by row_type ('doc' | 'lineage') so one mapInPandas pass yields
-# both the spans table and the lineage table without a second scan.
+# routed by row_type ('doc' | 'quarantine' | 'lineage') so one mapInArrow
+# pass yields both the spans table and the lineage table without a second
+# scan.
 UNIFIED_SCHEMA = T.StructType(
     [
         T.StructField("row_type", T.StringType(), False),

@@ -13,7 +13,6 @@ per document without any sink-side transaction support.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import job
 from ..schema import DOCS_SCHEMA
@@ -58,16 +57,11 @@ def run_streaming_extraction(spark: SparkSession, input_dir: str,
     q.awaitTermination()
 
     table = open_table(spark, out_root)
-    new_ids = [s["id"] for s in table.snapshots() if s["id"] not in before]
-    docs_in = docs_out = 0
-    for sid in new_ids:
-        lin = (table.read_snapshot(spark, sid)
-               .filter(F.col("row_type") == "lineage")
-               .groupBy().sum("docs_in", "docs_out").collect()[0])
-        docs_in += lin[0] or 0
-        docs_out += lin[1] or 0
-    return {"docs_in": docs_in, "docs_out": docs_out,
-            "snapshots": len(new_ids)}
+    totals = [job.snapshot_totals(spark, table, s["id"])
+              for s in table.snapshots() if s["id"] not in before]
+    return {"docs_in": sum(t["docs_in"] for t in totals),
+            "docs_out": sum(t["docs_out"] for t in totals),
+            "snapshots": len(totals)}
 
 
 # ---------------------------------------------------------------------------

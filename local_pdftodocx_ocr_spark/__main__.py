@@ -11,7 +11,7 @@ spark-submit supply the session):
 
 The input may be either the interleaved (doc_id, spans) table itself or
 a flat documents table (doc_id:int, text:string), which is deterministically
-interleaved first (synth.spans_from_flat_doc).
+interleaved inside the extraction pass (synth.spans_from_flat_doc).
 """
 
 from __future__ import annotations

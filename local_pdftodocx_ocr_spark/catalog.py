@@ -341,8 +341,9 @@ def open_table(spark: SparkSession, root_or_identifier: str):
     ``out.parquet``) is rejected loudly instead of silently
     os.makedirs()-ing a literal ``db.table`` directory: qualify it as
     ``catalog.db.table`` or spell the path ``./out.parquet``."""
-    confs = {k for k, _ in spark.sparkContext.getConf().getAll()}
-    has_iceberg = any(k.startswith("spark.sql.catalog.") for k in confs)
+    # one prefix lookup on the live conf: getConf() copies every entry
+    jconf = spark.sparkContext._jsc.sc().conf()
+    has_iceberg = len(jconf.getAllWithPrefix("spark.sql.catalog.")) > 0
     if _looks_like_identifier(root_or_identifier):
         if not has_iceberg:
             raise ValueError(

@@ -3,15 +3,17 @@
 Physical plan (designed for 1000 executors / 100 TB; tested on local[N]):
 
   read input (doc_id, spans)                 -- Iceberg/parquet scan;
-                                                column-pruned, snapshot-based
+    or flat (doc_id, flat_id, text)             column-pruned, snapshot-based
   [resume] LEFT ANTI JOIN committed doc_ids  -- the only cluster-wide join;
                                                 committed ids are read with
                                                 the known unified schema
-                                                (no inference job)
+                                                (no inference job); flat
+                                                rows drop before any Python
   repartition(P, xxhash64(doc_id, salt))     -- salted hash defuses
                                                 large-document key skew
                                                 (north rule; SURVEY.md §2.9 R1)
   mapInArrow(extract_batch)                  -- ONE Arrow-batched pass:
+                                                interleave flat rows, then
                                                 route/clean/recognize/dedup/
                                                 order kernels per document,
                                                 one batched recognize call
@@ -42,7 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from . import kernels
+from . import kernels, synth
 from .catalog import open_table
 from .schema import DOCS_SCHEMA, UNIFIED_SCHEMA
 
@@ -123,13 +125,24 @@ def _unified_rows(results: Iterator[list[tuple]],
         wall_ms=[int((time.monotonic() - t0) * 1000)])
 
 
+def _spans_column(batch: pa.RecordBatch) -> list[list[dict]]:
+    """A record batch's spans as lists of dicts: its ``spans`` column,
+    or, for a flat projection (interleaved_docs_from_flat), the spans
+    synthesized from each (flat_id, text) row."""
+    if "spans" in batch.schema.names:
+        return batch.column("spans").to_pylist()
+    return [synth.spans_from_flat_doc(i, text) for i, text in
+            zip(batch.column("flat_id").to_pylist(), batch.column("text").to_pylist())]
+
+
 def extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """mapInArrow body. Per record batch: one batched recognize call,
-    then the per-document kernel pipeline over the spans read as lists
-    of dicts. After the partition drains, exactly one lineage row."""
+    """mapInArrow body. Per record batch: the spans (read, or
+    synthesized from flat rows), one batched recognize call, then the
+    per-document kernel pipeline. After the partition drains, exactly
+    one lineage row."""
     def results() -> Iterator[list[tuple]]:
         for batch in batches:
-            spans_col = batch.column("spans").to_pylist()
+            spans_col = _spans_column(batch)
             media_text = _recognized(spans_col)
             rows = []
             for doc_id, spans in zip(batch.column("doc_id").to_pylist(), spans_col):
@@ -237,7 +250,7 @@ def extract_spans_auto(docs: DataFrame, num_partitions: int | None = None,
     """Skew-complete extraction: normal docs through the single-pass
     salted-repartition plan, oversized docs (> chunk_threshold spans)
     through the chunked two-phase plan; one unified output."""
-    sized = docs.withColumn("_n", F.size("spans"))
+    sized = materialize_spans(docs).withColumn("_n", F.size("spans"))
     small = sized.filter(F.col("_n") <= chunk_threshold).drop("_n")
     fat = sized.filter(F.col("_n") > chunk_threshold).drop("_n")
     return extract_spans(small, num_partitions, salt).unionByName(
@@ -417,6 +430,7 @@ def inject_external_detections(docs: DataFrame, dets: DataFrame,
     validity-check."""
     from pyspark.sql import Window as W
 
+    docs = materialize_spans(docs)
     w = W.partitionBy("doc_id").orderBy(
         "page", "y", "x", "w", "h", "cls", "media_ref")
     spans = dets.filter((F.col("conf") >= min_conf)
@@ -449,17 +463,23 @@ def docs_df_from_corpus(spark: SparkSession, corpus: list[tuple[str, list[dict]]
 
 
 def interleaved_docs_from_flat(documents: DataFrame) -> DataFrame:
-    """Derive the input_hint-shaped corpus from the driver's flat
-    ``documents`` table (doc_id:int, text:string) — deterministic synth
-    inside mapInArrow, no external data (synth.spans_from_flat_doc)."""
-    from . import synth
+    """The driver's flat ``documents`` table (doc_id:int, text:string)
+    as a JVM-only projection (``doc-%08d`` doc_id, the integer id as
+    flat_id, text); extract_batch interleaves each row inside its one
+    crossing, after the resume anti-join (synth.spans_from_flat_doc)."""
+    return documents.select(F.format_string("doc-%08d", "doc_id").alias("doc_id"),
+                            F.col("doc_id").alias("flat_id"), "text")
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = [int(i) for i in batch.column("doc_id").to_pylist()]
-            yield _record_batch(
-                _DOCS_ARROW, doc_id=[f"doc-{i:08d}" for i in ids],
-                spans=[synth.spans_from_flat_doc(i, text) for i, text
-                       in zip(ids, batch.column("text").to_pylist())])
 
-    return documents.select("doc_id", "text").mapInArrow(gen, schema=DOCS_SCHEMA)
+def _with_spans(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        yield _record_batch(_DOCS_ARROW, doc_id=batch.column("doc_id").to_pylist(),
+                            spans=_spans_column(batch))
+
+
+def materialize_spans(docs: DataFrame) -> DataFrame:
+    """``docs`` as (doc_id, spans): a flat projection pays a crossing of
+    its own, so only paths that read spans before extraction use it."""
+    if "spans" in docs.columns:
+        return docs
+    return docs.mapInArrow(_with_spans, schema=DOCS_SCHEMA)

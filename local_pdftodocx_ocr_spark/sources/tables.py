@@ -65,28 +65,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Temp views for SQL-first callers (mirrors the driver's DuckDB
-    view registration, so the same SQL text runs on both engines)."""
-    for name in TPCH_TABLES + AUX_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def load_interleaved_docs(spark: SparkSession, path: str) -> DataFrame:
-    """The extraction input: either an interleaved (doc_id, spans)
-    table, or a flat (doc_id, text) documents table which is
-    deterministically interleaved first (synth.spans_from_flat_doc)."""
-    df = spark.read.parquet(path)
-    if "spans" in df.columns:
-        return df.select("doc_id", "spans")
-    if {"doc_id", "text"} <= set(df.columns):
-        from ..job import interleaved_docs_from_flat
-        return interleaved_docs_from_flat(df)
-    raise ValueError(
-        f"input at {path} must have (doc_id, spans) or (doc_id, text); "
-        f"got {sorted(df.columns)}")
-
-
 def empty_docs(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], DOCS_SCHEMA)
 

@@ -193,12 +193,19 @@ class TestOpenTableRouting:
         assert not cat._is_ambiguous_dotted_name("cat.db.table")  # 2 dots
 
         class _FakeConf:
-            def getAll(self):
-                return [("spark.sql.catalog.local", "x")]
+            def getAllWithPrefix(self, prefix):
+                assert prefix == "spark.sql.catalog."
+                return [("local", "x")]
+
+        class _FakeJSC:
+            def sc(self):
+                return self
+
+            def conf(self):
+                return _FakeConf()
 
         class _FakeSC:
-            def getConf(self):
-                return _FakeConf()
+            _jsc = _FakeJSC()
 
         class _FakeSpark:
             sparkContext = _FakeSC()

@@ -1,23 +1,32 @@
 """The extraction job's Python boundary and its fixed per-run cost.
 
-Pins three things: a document whose extraction comes out empty is
+Pins four things: a document whose extraction comes out empty is
 committed as a quarantine row on both execution paths; no extraction
-plan crosses into Python through pandas; and ``run_job`` launches no
-more Spark jobs than the write plus a one-job lineage read-back need.
+plan crosses into Python through pandas, and a flat batch crosses once,
+after its resume anti-join; the JVM-side flat id equals the Python
+``doc-%08d`` form; and ``run_job`` launches no more Spark jobs than the
+write plus a one-job lineage read-back need.
 """
 
 from __future__ import annotations
 
+import re
+
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from local_pdftodocx_ocr_spark import job, oracle, synth
+from local_pdftodocx_ocr_spark import job, kernels, oracle, synth
 from local_pdftodocx_ocr_spark.catalog import open_table
 from local_pdftodocx_ocr_spark.plans.asserts import executed_plan
 
 # whitespace-only text spans route to nothing: the extraction is empty
 EMPTY_DOC = ("doc-empty", [{"kind": "text", "text": "   ", "media_ref": "",
                             "offset": i} for i in range(8)])
+# flat (doc_id, text) rows: negative and 9+-digit ids, 1 to 9 spans each
+FLAT_DOCS = [(i, " ".join(f"w{(i * 7 + k) % 53}" for k in range(12 * (1 + i % 6))))
+             for i in (*range(-3, 18), 123456789, 9876543210)]
 
 
 @pytest.mark.parametrize("chunk_threshold", [None, 3], ids=["single_pass", "chunked"])
@@ -51,12 +60,92 @@ def test_extraction_plans_have_no_pandas_boundary(spark):
     corpus = synth.gen_corpus(4)
     docs = job.docs_df_from_corpus(spark, corpus)
     flat = spark.createDataFrame([(1, "alpha beta"), (2, "gamma")], "doc_id int, text string")
+    assert _python_nodes(executed_plan(job.interleaved_docs_from_flat(flat))) == []
+    fused = executed_plan(job.extract_spans(job.interleaved_docs_from_flat(flat),
+                                            num_partitions=2))
+    assert _python_nodes(fused) == ["MapInArrow"], fused
     for df in (job.extract_spans(docs, num_partitions=2),
-               job.extract_spans_auto(docs, num_partitions=2, chunk_threshold=3),
-               job.interleaved_docs_from_flat(flat)):
+               job.extract_spans_auto(docs, num_partitions=2, chunk_threshold=3)):
         plan = executed_plan(df)
         assert "MapInArrow" in plan
         assert "Pandas" not in plan, plan
+
+
+def _python_nodes(plan: str) -> list[str]:
+    return re.findall(r"\b(\w*(?:InArrow|InPandas|EvalPython\w*))\b ", plan)
+
+
+def test_resumed_flat_run_job_crosses_into_python_once(spark, tmp_path, monkeypatch):
+    """A resumed flat batch: replayed rows are anti-joined as flat rows
+    below the salted exchange, and the one Python node above it both
+    interleaves and extracts."""
+    flat = spark.createDataFrame(FLAT_DOCS, "doc_id long, text string")
+    out = str(tmp_path / "flat")
+    job.run_job(spark, job.interleaved_docs_from_flat(flat.limit(10)), out,
+                num_partitions=2)
+    planned = []
+    extract_spans = job.extract_spans
+
+    def recording(*args, **kwargs):
+        planned.append(extract_spans(*args, **kwargs))
+        return planned[-1]
+
+    monkeypatch.setattr(job, "extract_spans", recording)
+    stats = job.run_job(spark, job.interleaved_docs_from_flat(flat), out, num_partitions=2)
+    assert stats["docs_in"] == len(FLAT_DOCS) - 10
+
+    plan = executed_plan(planned[0])
+    assert _python_nodes(plan) == ["MapInArrow"], plan
+    lines = plan.splitlines()
+    exchange = next(i for i, line in enumerate(lines) if "Exchange hashpartitioning(xxhash64" in line)
+    anti = next(i for i, line in enumerate(lines) if "LeftAnti" in line)
+    python = next(i for i, line in enumerate(lines) if "MapInArrow" in line)
+    assert python < exchange < anti, plan
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(ints=st.lists(st.integers(-2**31, 2**31 - 1), min_size=1, max_size=20),
+       longs=st.lists(st.integers(-2**63, 2**63 - 1), min_size=1, max_size=20))
+@example(ints=[0, 1, -1, 5, -5, 123456789, 1234567890, 2**31 - 1, -2**31],
+         longs=[99999999, 100000000, -100000000, 9876543210, 2**63 - 1, -2**63])
+def test_jvm_flat_id_matches_python_form(spark, ints, longs):
+    for ddl, ids in (("int", ints), ("bigint", longs)):
+        flat = spark.createDataFrame([(i, "") for i in ids], f"doc_id {ddl}, text string")
+        got = [r["doc_id"] for r in job.interleaved_docs_from_flat(flat).collect()]
+        assert got == [f"doc-{i:08d}" for i in ids], ddl
+
+
+def test_flat_input_on_span_array_paths(spark, tmp_path, capsys):
+    """Flat input through the two paths that read span arrays before
+    extraction (the chunked split and the --detections merge) commits
+    the checksum of the sequential fold over synth.spans_from_flat_doc."""
+    import json
+
+    from local_pdftodocx_ocr_spark.__main__ import main
+
+    corpus = [(f"doc-{i:08d}", synth.spans_from_flat_doc(i, text)) for i, text in FLAT_DOCS]
+    assert max(len(spans) for _, spans in corpus) > 3
+    flat = spark.createDataFrame(FLAT_DOCS, "doc_id long, text string")
+    chunked = job.run_job(spark, job.interleaved_docs_from_flat(flat),
+                          str(tmp_path / "chunked"), num_partitions=3, chunk_threshold=3)
+    assert chunked["checksum"] == oracle.expected_lineage_totals(corpus)["checksum"]
+
+    dets = [(doc_id, 0, 40.0, 700.0, 300.0, 120.0, "figure", conf,
+             kernels.encode_media(f"photo-{doc_id}"))
+            for doc_id, _ in corpus[::4] for conf in (0.88, 0.31)]
+    dets_path = str(tmp_path / "dets.parquet")
+    spark.createDataFrame(
+        dets, "doc_id string, page int, x double, y double, w double, "
+              "h double, cls string, conf double, media_ref string").write.parquet(dets_path)
+    in_path = str(tmp_path / "flat.parquet")
+    flat.write.parquet(in_path)
+    rc = main(["--input", in_path, "--output", str(tmp_path / "det"),
+               "--partitions", "2", "--detections", dets_path])
+    assert rc == 0
+    cli = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    want = oracle.expected_lineage_totals(synth.apply_detections_seq(corpus, dets))
+    assert cli["checksum"] == want["checksum"] != chunked["checksum"]
 
 
 def _jobs_launched(spark, group: str, fn) -> int:

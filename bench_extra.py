@@ -8,6 +8,7 @@ dumps .explain("formatted") to a directory.
     python bench_extra.py q1_pricing_summary docs_dedup_jaccard_pairs
     python bench_extra.py --all
     python bench_extra.py --plans plans/r07 --suffix _before docs_dedup_jaccard_pairs
+    python bench_extra.py --worker-overhead
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32), BENCH_EXTRA_REPS (default 3).
@@ -31,6 +32,75 @@ def _headline():
     return bench.HEADLINE
 
 
+def _noop_task(batches):
+    """A no-op mapInArrow body that reports its worker's pid, the CPU
+    time the worker has used so far, the zip directories it has read
+    so far, and its bootstrap state. It imports the package as every
+    engine crossing does."""
+    import gc
+    import zipimport
+
+    import pyarrow as pa
+
+    from local_pdftodocx_ocr_spark import job  # noqa: F401
+
+    if not hasattr(zipimport, "_probe_reads"):
+        stock = zipimport._read_directory
+
+        def counted(archive):
+            zipimport._probe_reads += 1
+            return stock(archive)
+        zipimport._probe_reads = 0
+        zipimport._read_directory = counted
+    for _ in batches:
+        pass
+    yield pa.RecordBatch.from_pylist([{
+        "pid": os.getpid(), "cpu_s": time.process_time(),
+        "zip_reads": zipimport._probe_reads, "frozen": gc.get_freeze_count(),
+        "patched": zipimport.zipimporter.invalidate_caches.__module__ != "zipimport"}])
+
+
+def worker_overhead(reps: int) -> dict:
+    """The fixed per-task cost of Spark's Python workers: a warmed
+    no-op mapInArrow over 16 partitions on local[4], `reps` times.
+    Per-task worker CPU and zip directory reads are per-pid deltas
+    between a worker's consecutive tasks, so they include the task
+    set-up before and the daemon's clean-up after the task body."""
+    import statistics
+    import zipimport
+
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (os.path.dirname(os.path.abspath(__file__)),
+                    os.environ.get("PYTHONPATH")) if p)
+    spark = job.build_session(4, app="worker-overhead")
+    spark.sparkContext.setLogLevel("ERROR")
+    schema = "pid long, cpu_s double, zip_reads long, frozen long, patched boolean"
+    df = spark.range(0, 16, numPartitions=16).mapInArrow(_noop_task, schema)
+    last = {r["pid"]: r for r in df.collect()}   # warm every worker
+    walls, cpu, reads, rows = [], [], [], []
+    for _ in range(reps):
+        t0 = time.monotonic()
+        rows = df.collect()
+        walls.append(round(time.monotonic() - t0, 3))
+        for r in sorted(rows, key=lambda r: (r["pid"], r["cpu_s"])):
+            if r["pid"] in last:
+                cpu.append(r["cpu_s"] - last[r["pid"]]["cpu_s"])
+                reads.append(r["zip_reads"] - last[r["pid"]]["zip_reads"])
+            last[r["pid"]] = r
+    spark.stop()
+    return {"wall_s": min(walls), "walls": walls,
+            "task_cpu_s": round(statistics.median(cpu), 4),
+            "task_cpu_s_q1_q3": [round(q, 4) for q in
+                                 statistics.quantiles(cpu, n=4)[::2]],
+            "zip_reads_per_task": statistics.mean(reads),
+            "tasks_measured": len(cpu), "workers": len(last),
+            "last_rep_tasks_patched": sum(r["patched"] for r in rows),
+            "last_rep_tasks_frozen": sum(r["frozen"] > 0 for r in rows),
+            "driver_patched": zipimport.zipimporter.invalidate_caches.__module__
+            != "zipimport",
+            "python": sys.version.split()[0]}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
@@ -38,9 +108,16 @@ def main() -> int:
     ap.add_argument("--plans", default=None,
                     help="directory to write <query><suffix>.txt explain dumps")
     ap.add_argument("--suffix", default="_before")
+    ap.add_argument("--worker-overhead", action="store_true",
+                    help="time a warmed no-op mapInArrow over 16 partitions "
+                         "on local[4]: wall, per-task worker CPU and zip "
+                         "directory reads per task")
     ap.add_argument("--reps", type=int,
                     default=int(os.environ.get("BENCH_EXTRA_REPS", "3")))
     args = ap.parse_args()
+    if args.worker_overhead:
+        print(json.dumps(worker_overhead(args.reps)))
+        return 0
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))

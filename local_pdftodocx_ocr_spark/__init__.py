@@ -17,6 +17,12 @@ Layout:
                mapInArrow -> spans + lineage, idempotent resume)
   operators/ - relational, dedup, similarity, textstats, multimodal
   streaming/ - structured-streaming analogs (windowed event aggregation)
+  worker_bootstrap - once-per-process set-up of Spark's Python workers,
+               run on the package's first import in a worker
 """
 
 __version__ = "0.1.0"
+
+from . import worker_bootstrap
+
+worker_bootstrap.install()

@@ -247,14 +247,12 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         df = job.interleaved_docs_from_flat(df)
 
-    if args.detections:
-        df = job.inject_external_detections(
-            df, spark.read.parquet(args.detections))
-
     stats = job.run_job(spark, df, args.output,
                         resume=not args.no_resume,
                         num_partitions=args.partitions or None,
-                        chunk_threshold=args.chunk_threshold or None)
+                        chunk_threshold=args.chunk_threshold or None,
+                        detections=(spark.read.parquet(args.detections)
+                                    if args.detections else None))
     if args.curate:
         write_curated(spark, stats)
     print(json.dumps(stats))

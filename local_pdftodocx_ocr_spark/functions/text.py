@@ -29,13 +29,3 @@ def recognize_udf(refs: pd.Series) -> pd.Series:
     """Batched recognize: ONE recognize_batch call per Arrow batch."""
     texts = kernels.recognize_batch(list(refs.fillna("")))
     return pd.Series(texts, index=refs.index)
-
-
-@F.pandas_udf(T.StringType())
-def flatten_table_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: kernels.flatten_table(x or ""))
-
-
-@F.pandas_udf(T.BooleanType())
-def is_reliable_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: kernels.is_reliable_text(x or ""))

@@ -9,6 +9,8 @@ Physical plan (designed for 1000 executors / 100 TB; tested on local[N]):
                                                 the known unified schema
                                                 (no inference job); flat
                                                 rows drop before any Python
+  [detections] LEFT JOIN detection spans     -- after the anti-join, so
+                                                replayed docs skip it
   repartition(P, xxhash64(doc_id, salt))     -- salted hash defuses
                                                 large-document key skew
                                                 (north rule; SURVEY.md §2.9 R1)
@@ -36,7 +38,6 @@ import os
 import time
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
@@ -283,7 +284,8 @@ def snapshot_totals(spark: SparkSession, table, snapshot_id: str) -> dict:
 
 def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
             resume: bool = True, num_partitions: int | None = None,
-            chunk_threshold: int | None = None) -> dict:
+            chunk_threshold: int | None = None,
+            detections: DataFrame | None = None) -> dict:
     """Execute the extraction with snapshot commit + idempotent resume.
 
     One full pass: the unified (docs + lineage) output is written to a
@@ -293,12 +295,17 @@ def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
 
     `out_root` may be a directory (parquet-snapshot fallback) or an
     Iceberg ``catalog.db.table`` identifier — open_table routes; both
-    backends satisfy the same contract (tests/test_catalog_contract)."""
+    backends satisfy the same contract (tests/test_catalog_contract).
+
+    A `detections` side table is merged (inject_external_detections)
+    after the anti-join, so replayed docs skip the merge."""
     table = open_table(spark, out_root)
     if resume:
         done = table.committed_doc_ids(spark, UNIFIED_SCHEMA)
         if done is not None:
             docs = docs.join(done, "doc_id", "left_anti")
+    if detections is not None:
+        docs = inject_external_detections(docs, detections)
 
     snap_id, staging = table.begin()
     if chunk_threshold:
@@ -337,20 +344,18 @@ def write_media_store(spark: SparkSession, docs: DataFrame, out_dir: str) -> int
     payload into a binary side table (media_ref, payload, byte_len).
     Spans keep carrying only the ref — binary never rides a shuffle with
     document rows (SURVEY §1.3). Returns the number of refs written."""
-    from pyspark.sql import types as T
-
     refs = (docs.select(F.explode("spans").alias("s"))
             .select(F.col("s.media_ref").alias("media_ref"))
             .filter(F.col("media_ref") != "")
             .distinct())
 
-    @F.pandas_udf(T.BinaryType())
-    def decode(refs_s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [kernels.recognize_one(r).encode("utf-8") for r in refs_s],
-            index=refs_s.index)
+    @F.arrow_udf(T.BinaryType())
+    def decode(refs_a: pa.Array) -> pa.Array:
+        return pa.array([kernels.recognize_one(r).encode("utf-8")
+                         for r in refs_a.to_pylist()], pa.binary())
 
-    out = refs.select("media_ref", decode(F.col("media_ref")).alias("payload"))               .withColumn("byte_len", F.length("payload"))
+    out = (refs.select("media_ref", decode(F.col("media_ref")).alias("payload"))
+           .withColumn("byte_len", F.length("payload")))
     out.write.mode("overwrite").parquet(out_dir)
     return spark.read.parquet(out_dir).count()
 

@@ -87,6 +87,19 @@ FROM documents
 # Quality scoring (length / punctuation / stopword components)
 # ---------------------------------------------------------------------------
 
+def _round4(c: Column) -> Column:
+    """A double rounded to 4 places through its decimal(18,10) cast.
+    Both engines round that decimal half-up; their ROUND of the double
+    itself disagrees on half-way cases (Spark rounds the double's exact
+    binary value, DuckDB a product scaled in binary). _round4_sql is
+    the SQL twin."""
+    return F.round(c.cast("decimal(18,10)"), 4).cast("double")
+
+
+def _round4_sql(expr: str) -> str:
+    return f"CAST(ROUND(CAST({expr} AS DECIMAL(18, 10)), 4) AS DOUBLE)"
+
+
 def _quality_components() -> tuple[Column, Column, Column, Column]:
     """(len_component, stop_ratio, mean_tok_len, quality) over a `text`
     column — the single definition the scoring query, the filter chain
@@ -97,8 +110,8 @@ def _quality_components() -> tuple[Column, Column, Column, Column]:
     stop_ratio = stop_hits / n_tok
     len_component = F.least(F.length("text") / F.lit(400.0), F.lit(1.0))
     mean_tok_len = (F.length("text") - (n_tok - 1)) / n_tok
-    score = F.round(0.5 * len_component + 0.3 * stop_ratio
-                    + 0.2 * (mean_tok_len / 10.0), 4)
+    score = _round4(0.5 * len_component + 0.3 * stop_ratio
+                    + 0.2 * (mean_tok_len / 10.0))
     return len_component, stop_ratio, mean_tok_len, score
 
 
@@ -107,9 +120,9 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     len_component, stop_ratio, mean_tok_len, score = _quality_components()
     return d.select(
         "doc_id",
-        F.round(len_component, 4).alias("len_component"),
-        F.round(stop_ratio, 4).alias("stop_ratio"),
-        F.round(mean_tok_len, 4).alias("mean_tok_len"),
+        _round4(len_component).alias("len_component"),
+        _round4(stop_ratio).alias("stop_ratio"),
+        _round4(mean_tok_len).alias("mean_tok_len"),
         score.alias("quality"),
     )
 
@@ -126,10 +139,10 @@ WITH q AS (
   FROM documents
 )
 SELECT doc_id,
-       ROUND(len_component, 4) AS len_component,
-       ROUND(stop_ratio, 4) AS stop_ratio,
-       ROUND(mean_tok_len, 4) AS mean_tok_len,
-       ROUND(0.5 * len_component + 0.3 * stop_ratio + 0.2 * (mean_tok_len / 10.0), 4) AS quality
+       {_round4_sql("len_component")} AS len_component,
+       {_round4_sql("stop_ratio")} AS stop_ratio,
+       {_round4_sql("mean_tok_len")} AS mean_tok_len,
+       {_round4_sql("0.5 * len_component + 0.3 * stop_ratio + 0.2 * (mean_tok_len / 10.0)")} AS quality
 FROM q
 """
 
@@ -1551,7 +1564,8 @@ FROM cuts CROSS JOIN mx
 # map-only pass, at histogram resolution (docs sharing a boundary bin
 # share a phase — deterministic, and the trade every at-scale quantile
 # consumer makes). Integer-exact thresholds; the only float op is the
-# shared ROUND(quality,4) score both engines already agree on.
+# shared 4-place quality score, rounded through one decimal cast
+# on both engines.
 # ---------------------------------------------------------------------------
 
 CURR_QBIN_SCALE = 64          # quality in [0,~1.5] -> bins of 1/64
@@ -1591,8 +1605,8 @@ WITH q AS (
 ),
 binned AS (
   SELECT doc_id,
-         LEAST(CAST(FLOOR(ROUND(0.5 * len_component + 0.3 * stop_ratio
-                                + 0.2 * (mean_tok_len / 10.0), 4)
+         LEAST(CAST(FLOOR({_round4_sql("0.5 * len_component + 0.3 * stop_ratio"
+                                       " + 0.2 * (mean_tok_len / 10.0)")}
                           * {CURR_QBIN_SCALE}) AS BIGINT),
                {CURR_MAX_BIN}) AS qbin
   FROM q

@@ -44,11 +44,9 @@ def run_streaming_extraction(spark: SparkSession, input_dir: str,
     stream = read_docs_stream(spark, input_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        if detections is not None:
-            batch_df = job.inject_external_detections(batch_df, detections)
         job.run_job(batch_df.sparkSession, batch_df, out_root,
                     resume=True, num_partitions=num_partitions,
-                    chunk_threshold=chunk_threshold)
+                    chunk_threshold=chunk_threshold, detections=detections)
 
     q = (stream.writeStream.foreachBatch(process)
          .option("checkpointLocation", checkpoint_dir)

@@ -3,9 +3,9 @@
 Pins four things: a document whose extraction comes out empty is
 committed as a quarantine row on both execution paths; no extraction
 plan crosses into Python through pandas, and a flat batch crosses once,
-after its resume anti-join; the JVM-side flat id equals the Python
-``doc-%08d`` form; and ``run_job`` launches no more Spark jobs than the
-write plus a one-job lineage read-back need.
+after its resume anti-join, also with a detections merge; the JVM-side
+flat id equals the Python ``doc-%08d`` form; and ``run_job`` launches no
+more Spark jobs than the write plus a one-job lineage read-back need.
 """
 
 from __future__ import annotations
@@ -101,6 +101,20 @@ def test_resumed_flat_run_job_crosses_into_python_once(spark, tmp_path, monkeypa
     anti = next(i for i, line in enumerate(lines) if "LeftAnti" in line)
     python = next(i for i, line in enumerate(lines) if "MapInArrow" in line)
     assert python < exchange < anti, plan
+
+    # with detections, the spans are materialized for the merge only
+    # after the anti-join: no Python node sits below it
+    dets = spark.createDataFrame(
+        [("doc-00000011", 0, 40.0, 700.0, 300.0, 120.0, "figure", 0.9, "")],
+        "doc_id string, page int, x double, y double, w double, h double, "
+        "cls string, conf double, media_ref string")
+    planned.clear()
+    for docs in (flat.limit(10), flat):
+        job.run_job(spark, job.interleaved_docs_from_flat(docs), str(tmp_path / "dets"),
+                    num_partitions=2, detections=dets)
+    lines = executed_plan(planned[1]).splitlines()
+    anti = next(i for i, line in enumerate(lines) if "LeftAnti" in line)
+    assert _python_nodes("\n".join(lines[anti:])) == [], lines
 
 
 @settings(max_examples=15, deadline=None,

@@ -1888,3 +1888,26 @@ class TestPropsJson:
         assert 0 < len(rows) <= 5 * 10
         assert sum(r["n"] for r in rows) == \
             spark.read.parquet(f"{SF_DIR}/events.parquet").count()
+
+
+class TestQualityRounding:
+    """The 4-place quality score agrees with its DuckDB oracle on
+    generated documents, whose short texts hit half-way scores (the
+    seeds hold docs where each engine's ROUND of the double itself
+    gives 0.3798 against 0.3797)."""
+
+    @pytest.mark.parametrize("seed", [2, 42])
+    def test_matches_oracle_on_generated_documents(self, spark, tmp_path, seed):
+        import duckdb
+
+        from local_pdftodocx_ocr_spark.operators import textstats as TS
+        from perfbench import inputs
+
+        path = str(tmp_path / "documents.parquet")
+        inputs.write_documents(inputs.documents_rows(seed, 1000), path)
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        got = sorted(map(tuple, TS.quality_score(spark, str(tmp_path)).collect()))
+        assert got == sorted(con.execute(TS.QUALITY_SQL).fetchall())
+        got = sorted(map(tuple, TS.curriculum_phases(spark, str(tmp_path)).collect()))
+        assert got == sorted(con.execute(TS.CURRICULUM_SQL).fetchall())

@@ -38,28 +38,15 @@ def entry(spark: SparkSession) -> DataFrame:
     return extraction.extract_from_documents(spark, "/root/testdata/sf0.001")
 
 
-# Iteration order matters: the driver verifies queries() in order with
-# a bounded window (~50 per round). _PRIORITY rotates each round
-# (VERDICT r3 #2); never-driver-checked queries ALWAYS outrank
-# re-verification of green ones (ADVICE r4 #1). Round 6 pins, in
-# order: (a) the 7 new round-6 queries (the production-threshold
-# unified components with its sequential oracle — VERDICT r5 #2; the
-# incremental minhash near-dup — #4; the full composed training
-# pipeline — #3; the shard-manifest sink; the PQ-ADC and residual
-# IVF-PQ ANN with their sequential training+LUT oracles; the
-# no-split bin packer), then (b)
-# the 22 queries whose last driver-green row
-# is r03 — the full stale rotation tail, drained in one window
-# (VERDICT r5 #1), then (c) the r04-green set (46 queries; the part
-# past the ~50-query window rotates to round 7 — max staleness across
-# the registry falls back to <=2 rounds). The r5-green remainder fills
-# in module order past the window. No registered query's plan changed
-# this round (the three new ones only ADD consumers of unchanged
-# stages).
+# Iteration order matters: the driver verifies queries() in order
+# within a bounded window (~50 per round). _PRIORITY puts queries the
+# driver has never checked first, then the rest by the age of their
+# last green check, oldest first; unlisted queries follow in module
+# order.
 _MODULE_ORDER = (dedup, similarity, multimodal, textstats, extraction, relational)
 
 _PRIORITY = (
-    # --- never driver-checked: NEW round-6 queries first ---
+    # never driver-checked
     "docs_dedup_components_production",
     "docs_dedup_incremental_minhash",
     "pipeline_training_corpus_full",
@@ -67,7 +54,7 @@ _PRIORITY = (
     "emb_ann_pq_topk",
     "emb_ann_ivfpq_topk",
     "docs_pack_bins_nosplit",
-    # --- last green r03: the full stale tail (VERDICT r5 #1) ---
+    # oldest last green check
     "multimodal_features", "multimodal_frame_samples", "multimodal_resize",
     "docs_token_count", "docs_lang_id", "docs_quality_score",
     "docs_quality_repetition", "docs_quality_filter_chain",
@@ -77,8 +64,7 @@ _PRIORITY = (
     "docs_chunk_for_training", "docs_term_freq_cms",
     "events_kmv_distinct", "events_error_rate_hours",
     "orders_in_promo_windows", "q8_market_share", "q15_top_supplier",
-    # --- last green r04 (the window covers ~the first half; the rest
-    # rotates to round 7) ---
+    # next-oldest last green check
     "docs_dedup_bloom_screen", "docs_dedup_incremental_bloom",
     "docs_curriculum_phases", "docs_hll_distinct_shingles",
     "docs_hll_by_source", "docs_unigram_loglik",

@@ -25,7 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from local_pdftodocx_ocr_spark import job  # noqa: E402
+from local_pdftodocx_ocr_spark import job, memo  # noqa: E402
 from local_pdftodocx_ocr_spark.operators import (  # noqa: E402
     dedup,
     extraction,
@@ -199,7 +199,7 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
     # drop any signature caches the query registered: the 4x dedup-scale
     # repeats would otherwise stack persisted tables until GC
-    dedup.release_caches()
+    memo.release()
 
 
 def _bench_queries(spark, sf_dir: str) -> dict[str, float]:
@@ -524,7 +524,7 @@ def _emb_production_scale_section(spark, reps: int = 10) -> dict:
         out["ratio"] = round(out[f"x{reps}"]["wall"] / out["x1"]["wall"], 2)
         # r6: PQ / IVF-PQ growth on the same clustered corpora — the
         # trained-index paths must scale ~linearly (map-only encode +
-        # ADC + bounded windows). Caches cleared so each row is the
+        # ADC + bounded windows). Memos cleared so each row is the
         # honest cold train+encode+scan cost at that corpus size.
         for qname, fn in (("emb_ann_pq_topk", sim.ann_pq_topk),
                           ("emb_ann_ivfpq_topk", sim.ann_ivfpq_topk)):
@@ -533,8 +533,7 @@ def _emb_production_scale_section(spark, reps: int = 10) -> dict:
                 sf = f"{base_dir}/{label}"
                 best = None
                 for _ in range(2):
-                    sim._PQ_CACHE.pop(sf, None)
-                    sim._IVFPQ_CACHE.pop(sf, None)
+                    memo.clear()
                     t0 = time.monotonic()
                     _materialize(fn(spark, sf))
                     w = time.monotonic() - t0

@@ -24,7 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from local_pdftodocx_ocr_spark import job  # noqa: E402
+from local_pdftodocx_ocr_spark import job, memo  # noqa: E402
 
 
 def _headline():
@@ -136,20 +136,11 @@ def main() -> int:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
-    from local_pdftodocx_ocr_spark.operators import dedup, similarity, textstats
-
     # Queries that bench.py times WARM (they reuse a memo built by an
-    # earlier suite row); everything else is timed cold, so clear the
-    # module memos before each rep to mirror the frozen bench.
+    # earlier suite row); everything else is timed cold: its plan dump
+    # and every rep start from an empty registry.
     warm_consumers = {"docs_dedup_canonical_keep", "docs_dedup_cluster_sizes",
                       "emb_semdedup", "pipeline_training_corpus_full"}
-
-    def _clear_memos():
-        dedup.clear_unified_memo()
-        similarity._PQ_CACHE.clear()
-        similarity._IVFPQ_CACHE.clear()
-        similarity._KMEANS_CACHE.clear()
-        textstats._HH_CELLS_CACHE.clear()
 
     spark = job.build_session(cpus, app="bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
@@ -160,22 +151,24 @@ def main() -> int:
         fn = headline[name]
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
+            if name not in warm_consumers:
+                memo.clear()
             df = fn(spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
             with open(os.path.join(args.plans, f"{name}{args.suffix}.txt"),
                       "w", encoding="utf-8") as f:
                 f.write(plan)
-            dedup.release_caches()
+            memo.release()
         walls = []
         for _ in range(args.reps):
             if name not in warm_consumers:
-                _clear_memos()
+                memo.clear()
             spark.sparkContext.setJobDescription(name)
             t0 = time.monotonic()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             walls.append(round(time.monotonic() - t0, 3))
-            dedup.release_caches()
+            memo.release()
         if walls:
             out[name] = {"min": min(walls), "walls": walls}
             print(json.dumps({name: out[name]}), flush=True)

@@ -327,8 +327,6 @@ def strip_boilerplate_html(html: str) -> str:
 # token tables are replaced by the structural rules)
 # --------------------------------------------------------------------------
 
-_ASCII_LETTER_RE = re.compile(r"[A-Za-z]")
-
 
 def _thai_count(s: str) -> int:
     return len(_THAI_ANY_RE.findall(s or ""))

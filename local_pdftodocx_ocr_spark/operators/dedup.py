@@ -19,6 +19,8 @@ property-tested against the exact-Jaccard oracle in pytest
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
+
 MINHASH_PERMS = 32          # minhash signature length
 # 16 bands x 2 rows: P(candidate | J) = 1-(1-J^2)^16 -> 0.997 at J=0.6.
 # (8x4 banding only reaches ~0.67 at the threshold; round 1 passed the
@@ -40,46 +42,8 @@ JACCARD_THRESHOLD = 0.6
 SHINGLE_DF_CAP = 1000
 
 
-# Signature tables persisted inside the candidate queries (each feeds
-# several plan branches). ContextCleaner eventually unpersists them when
-# the Python references die, but "eventually" is wrong for callers that
-# invoke the same query repeatedly in one session (the dedup-scale bench
-# runs each 4x; plan dumps and tests call them again): caches would pile
-# up in executor memory until GC happens to run. Every persist() in this
-# module therefore registers here, and materializing callers call
-# release_caches() once the plan has executed. The registry holds STRONG
-# references, so it is also self-bounding: callers that never release
-# (the driver's queries() window runs ~50 queries back-to-back) evict
-# the oldest cache once more than _MAX_LIVE_CACHES are alive — evicted
-# plans simply recompute if re-executed.
-_LIVE_CACHES: list[DataFrame] = []
-# sized so the deepest single-query chain (the cold composed pipeline:
-# shingle table + capped index + minhash sigs + simhash sigs + rep +
-# embedding sigs + perplexity bins + ...) never evicts its own caches
-# mid-construction; each cache is one query's bounded intermediate
-_MAX_LIVE_CACHES = 12
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _LIVE_CACHES.append(df)
-    while len(_LIVE_CACHES) > _MAX_LIVE_CACHES:
-        _LIVE_CACHES.pop(0).unpersist(False)
-    return df
-
-
-def release_caches(blocking: bool = False) -> int:
-    """Unpersist every signature cache registered by this module's
-    queries. Safe to call at any time: the cached plans recompute if
-    re-executed. Returns the number of caches released."""
-    n = len(_LIVE_CACHES)
-    while _LIVE_CACHES:
-        _LIVE_CACHES.pop().unpersist(blocking)
-    # the shingle memo hands out the PERSISTED table; once that cache is
-    # released the memoized frame would silently recompute per plan
-    # branch, so the memo's lifetime is exactly the cache's
-    _SHINGLE_MEMO.clear()
-    return n
+# the registry's release under the name the harnesses import
+release_caches = memo.release
 
 
 def _docs(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
@@ -92,7 +56,7 @@ def _docs(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
     from ..sources.tables import spread_scan
     path = f"{sf_dir}/documents.parquet"
     df = spark.read.parquet(path)
-    return spread_scan(spark, df, key=path) if spread else df
+    return spread_scan(spark, df, path) if spread else df
 
 
 # ---------------------------------------------------------------------------
@@ -297,8 +261,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     sig_key = F.concat_ws("_", *[F.col("sig")[i].cast("string")
                                  for i in range(MINHASH_PERMS)])
-    sigs = _persist_tracked(minhash_signatures(d)
-                            .select("doc_id", sig_key.alias("sk"), "sig"))
+    sigs = memo.persist(minhash_signatures(d)
+                        .select("doc_id", sig_key.alias("sk"), "sig"))
     qualify = ((F.col("p") % 2 == 0) | (F.col("p") < F.col("x")))
     # tier 1: identical signatures — one equi-join on sk, found once
     # (not once per band)
@@ -438,20 +402,6 @@ def _capped_shingles(d: DataFrame, cap: int = SHINGLE_DF_CAP) -> DataFrame:
     return sh.join(ok, "s")
 
 
-# The hashed capped shingle table feeds MANY plan branches of each
-# dedup query (per-doc sizes + both sides of the inverted-index
-# self-join in the exact tier; the minhash aggregation AND the verify
-# joins in the LSH pipelines). Catalyst does not reuse the subtree
-# across branches (measured: the round-6 docs_dedup_jaccard_pairs plan
-# scanned the documents parquet 8x — tokenize/shingle/md5 ran 8 times
-# per query), so the table is persisted once and memoized per
-# (session, input plan, cap) — the in-sandbox stand-in for the
-# materialized shingle-index table a 100 TB pipeline maintains anyway.
-# Lifetime is tied to release_caches(): the bench/driver release after
-# every query, so every timed row still computes its shingles cold.
-_SHINGLE_MEMO: dict[tuple[str, int, int], DataFrame] = {}
-
-
 def _hashed_capped_shingles(d: DataFrame, cap: int = SHINGLE_DF_CAP) -> DataFrame:
     """(doc_id, k) where k = the first 60 bits of md5(shingle) — the
     shingle index every dedup tier joins/aggregates on. Hashing BEFORE
@@ -462,21 +412,23 @@ def _hashed_capped_shingles(d: DataFrame, cap: int = SHINGLE_DF_CAP) -> DataFram
     identical (negligible, 60-bit) collisions happen on every engine
     and cross-engine equality is exact. df cap applied on k.
 
-    Persisted + memoized (see _SHINGLE_MEMO above): one scan/explode/md5
-    pass per query, not one per plan branch."""
+    The table feeds many plan branches (per-doc sizes, both self-join
+    sides, the minhash aggregation, the verify joins) and Catalyst
+    does not share the subtree across them, so it is persisted once
+    and memoized per input files and cap: one scan/explode/md5 pass
+    per query, not one per branch. ``d`` is the documents table as
+    ``_docs`` reads it; every caller passes that."""
     from ..functions.hashing import md5_60bit
-    key = (d.sparkSession.sparkContext.applicationId, d.semanticHash(), cap)
-    hit = _SHINGLE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    sh = _persist_tracked(_distinct_shingles(d).select(
-        "doc_id", md5_60bit(F.col("s")).alias("k")))
-    ok = (sh.groupBy("k").agg(F.count("*").alias("df"))
-          .filter(F.col("df") <= cap)
-          .select("k"))
-    capped = _persist_tracked(sh.join(ok, "k"))
-    _SHINGLE_MEMO[key] = capped
-    return capped
+
+    def build():
+        sh = memo.persist(_distinct_shingles(d).select(
+            "doc_id", md5_60bit(F.col("s")).alias("k")))
+        ok = (sh.groupBy("k").agg(F.count("*").alias("df"))
+              .filter(F.col("df") <= cap)
+              .select("k"))
+        return memo.persist(sh.join(ok, "k"))
+    files = tuple(f.removeprefix("file://") for f in d.inputFiles())
+    return memo.get(d.sparkSession, "capped_shingles", files, build, (cap,))
 
 
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -608,8 +560,8 @@ def dedup_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equality-only uses below; cheaper to shuffle than array<long>
     sig_key = F.concat_ws("_", *[F.col("sig")[i].cast("string")
                                  for i in range(MINHASH_PERMS)])
-    sigs = _persist_tracked(minhash_signatures(d)
-                            .select("doc_id", sig_key.alias("sk"), "sig"))
+    sigs = memo.persist(minhash_signatures(d)
+                        .select("doc_id", sig_key.alias("sk"), "sig"))
     s1, s2 = sigs.alias("s1"), sigs.alias("s2")
     intra = (
         s1.join(s2, (F.col("s1.sk") == F.col("s2.sk"))
@@ -771,11 +723,8 @@ def simhash_candidate_pairs(sigs: DataFrame) -> DataFrame:
 
     The signature table feeds five plan branches, so it is persisted —
     at corpus scale signatures are checkpointed to a table anyway (one
-    64-bit column; the simhash UDF never runs twice over 100 TB). The
-    cache registers in _LIVE_CACHES; materializing callers (bench,
-    plan dumps, repeated tests) release it via release_caches() rather
-    than waiting on ContextCleaner GC."""
-    sigs = _persist_tracked(sigs.select("doc_id", "simhash"))
+    64-bit column; the simhash UDF never runs twice over 100 TB)."""
+    sigs = memo.persist(sigs.select("doc_id", "simhash"))
     s1, s2 = sigs.alias("s1"), sigs.alias("s2")
     intra = (
         s1.join(s2, (F.col("s1.simhash") == F.col("s2.simhash"))
@@ -852,8 +801,8 @@ def _simhash_connectivity_edges(sigs: DataFrame) -> DataFrame:
     # sigs feeds the intra join AND the rep aggregate; rep feeds three
     # further branches — persist both (tracked) or the simhash pandas
     # UDF re-scans the corpus once per branch
-    sigs = _persist_tracked(sigs.select("doc_id", "simhash"))
-    rep = _persist_tracked(
+    sigs = memo.persist(sigs.select("doc_id", "simhash"))
+    rep = memo.persist(
         sigs.groupBy("simhash").agg(F.min("doc_id").alias("rep")))
     intra = (sigs.join(rep, "simhash")
              .filter(F.col("doc_id") != F.col("rep"))
@@ -1131,29 +1080,8 @@ def dedup_pipeline_at_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.join(dups, "doc_id", "left_anti").select("doc_id", "lang", "source")
 
 
-# The unified component labels are the single most expensive artifact
-# in the suite (three candidates->verify tiers + iterative star-CC) and
-# THREE registered queries consume them (components_unified itself,
-# canonical_keep, cluster_sizes). Recomputing the graph per caller paid
-# that wall cost 3x per session (VERDICT r4 #3). The labels are instead
-# computed once per (application, sf_dir) and shared via an eager
-# localCheckpoint — the in-sandbox stand-in for what a production
-# pipeline would do at 100 TB: write the labels table once and have
-# downstream stages read it. Values are unaffected (the checkpoint just
-# truncates lineage); correctness stays pinned by all three oracles.
-# Bounded: at most _UNIFIED_MEMO_MAX label tables stay referenced;
-# evicted/stale checkpoint blocks are freed by the ContextCleaner once
-# the reference drops.
-_UNIFIED_MEMO: dict[tuple[str, str], DataFrame] = {}
-_UNIFIED_MEMO_MAX = 4
 # observability for tests: counts actual graph computations (memo misses)
 UNIFIED_GRAPH_RUNS = 0
-
-
-def clear_unified_memo() -> None:
-    """Drop memoized unified-component labels (bench ladder: a timed
-    repeat must recompute, not read the checkpoint)."""
-    _UNIFIED_MEMO.clear()
 
 
 def dedup_components_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1176,36 +1104,34 @@ def dedup_components_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
     any diameter). Oracle: recursive CTE over the identically unioned
     edges (COMPONENTS_UNIFIED SQL via components_unified_sql()).
 
-    Computed once per (application, sf_dir); see _UNIFIED_MEMO above."""
+    The labels are the suite's most expensive artifact and three
+    registered queries consume them (this one, canonical_keep,
+    cluster_sizes), so they are computed once per input and shared
+    through an eager localCheckpoint — the stand-in for writing the
+    labels table once at 100 TB. The checkpoint only truncates
+    lineage; all three oracles pin the values."""
     from .similarity import embedding_near_dup_pairs_at_scale
 
-    global UNIFIED_GRAPH_RUNS
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _UNIFIED_MEMO.get(key)
-    if hit is not None:
-        return hit
-    d = _docs(spark, sf_dir)
-    jac = _verified_jaccard_pairs(d, dedup_minhash_candidates(spark, sf_dir))
-    # simhash tier: connectivity-preserving reduced edges (cluster-
-    # linear), not the full pair expansion (cluster-quadratic) — the
-    # closure, and hence every component, is identical
-    sim = _simhash_connectivity_edges(simhash64(spark, sf_dir))
-    emb = (embedding_near_dup_pairs_at_scale(spark, sf_dir)
-           .select(F.col("id1").alias("doc1"), F.col("id2").alias("doc2")))
-    # no .distinct() here: _star_components normalizes every edge to
-    # (lo, hi) and distincts BEFORE its first round, so an outer
-    # distinct was a second full exchange over the same edge set
-    edges = jac.unionByName(sim).unionByName(emb)
-    UNIFIED_GRAPH_RUNS += 1
-    out = (_star_components(d.select("doc_id"), edges)
-           .localCheckpoint(eager=True))
-    # drop stale sessions first, then oldest-insertion within this one
-    for k in [k for k in _UNIFIED_MEMO if k[0] != key[0]]:
-        del _UNIFIED_MEMO[k]
-    while len(_UNIFIED_MEMO) >= _UNIFIED_MEMO_MAX:
-        del _UNIFIED_MEMO[next(iter(_UNIFIED_MEMO))]
-    _UNIFIED_MEMO[key] = out
-    return out
+    def build():
+        global UNIFIED_GRAPH_RUNS
+        d = _docs(spark, sf_dir)
+        jac = _verified_jaccard_pairs(d, dedup_minhash_candidates(spark, sf_dir))
+        # simhash tier: connectivity-preserving reduced edges (cluster-
+        # linear), not the full pair expansion (cluster-quadratic) — the
+        # closure, and hence every component, is identical
+        sim = _simhash_connectivity_edges(simhash64(spark, sf_dir))
+        emb = (embedding_near_dup_pairs_at_scale(spark, sf_dir)
+               .select(F.col("id1").alias("doc1"), F.col("id2").alias("doc2")))
+        # no .distinct() here: _star_components normalizes every edge to
+        # (lo, hi) and distincts BEFORE its first round, so an outer
+        # distinct was a second full exchange over the same edge set
+        edges = jac.unionByName(sim).unionByName(emb)
+        UNIFIED_GRAPH_RUNS += 1
+        return (_star_components(d.select("doc_id"), edges)
+                .localCheckpoint(eager=True))
+    return memo.get(spark, "unified_labels",
+                    (f"{sf_dir}/documents.parquet", f"{sf_dir}/embeddings.parquet"),
+                    build)
 
 
 def components_unified_production_embeddings(
@@ -1237,8 +1163,8 @@ def components_unified_production_embeddings(
     # persist: the signature table feeds BOTH sides of the bucket
     # self-join — unpersisted, the Arrow-batched sign-projection pass
     # (and the corpus scan under it) runs once per side
-    sigs = _persist_tracked(lsh_bucket_signatures(e, bits=bits, tables=tables,
-                                                  with_vectors=False))
+    sigs = memo.persist(lsh_bucket_signatures(e, bits=bits, tables=tables,
+                                              with_vectors=False))
     s1 = sigs.select(F.col("vec_id").alias("doc1"), "table", "bucket")
     s2 = sigs.select(F.col("vec_id").alias("doc2"), "table", "bucket")
     cand = (s1.join(s2, ["table", "bucket"])

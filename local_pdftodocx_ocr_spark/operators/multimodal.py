@@ -51,7 +51,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on one core (no-op on a properly split layout)
     from ..sources.tables import spread_scan
     path = f"{sf_dir}/documents.parquet"
-    d = spread_scan(spark, spark.read.parquet(path), key=path)
+    d = spread_scan(spark, spark.read.parquet(path), path)
     return d.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("media"))
 
 

@@ -37,7 +37,7 @@ def _t_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     either way."""
     from ..sources.tables import spread_scan
     path = f"{sf_dir}/{name}.parquet"
-    return spread_scan(spark, spark.read.parquet(path), key=path)
+    return spread_scan(spark, spark.read.parquet(path), path)
 
 
 def _epoch(col):

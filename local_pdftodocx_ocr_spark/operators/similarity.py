@@ -15,6 +15,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
+
 TOP_K = 5
 N_QUERIES = 10          # first N vec_ids are the query set
 # Bits/tables tuned for THIS corpus (near-random vectors, top-1 cosine
@@ -32,7 +34,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a scan that already parallelizes — see sources.tables.spread_scan
     from ..sources.tables import spread_scan
     path = f"{sf_dir}/embeddings.parquet"
-    return spread_scan(spark, spark.read.parquet(path), key=path)
+    return spread_scan(spark, spark.read.parquet(path), path)
 
 
 def _cosine(a, b):
@@ -333,21 +335,6 @@ def _nd_bits_for(n: int) -> int:
     return max(ND_LSH_BITS, math.ceil(math.log2(n / ND_TARGET_OCCUPANCY)))
 
 
-# The bit-width probe needs the corpus size at PLAN-CONSTRUCTION time
-# (the hyperplane tensor is baked into the UDF closure), which breaks
-# the otherwise-lazy query-builder contract with one count job. Memoize
-# it per embeddings path so the three unified-graph queries and plan
-# dumps that all construct this query pay the job once per session; at
-# warehouse scale the number comes from table statistics instead.
-_EMB_COUNT_CACHE: dict[str, int] = {}
-
-
-def _emb_count(e: DataFrame, sf_dir: str) -> int:
-    if sf_dir not in _EMB_COUNT_CACHE:
-        _EMB_COUNT_CACHE[sf_dir] = e.count()
-    return _EMB_COUNT_CACHE[sf_dir]
-
-
 def embedding_near_dup_pairs_at_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB path for embedding near-dups (mirror of
     dedup_pipeline_at_scale): LSH-bucket candidate pairs -> exact cosine
@@ -355,16 +342,19 @@ def embedding_near_dup_pairs_at_scale(spark: SparkSession, sf_dir: str) -> DataF
     The bucket self-join replaces the O(n^2) theta join; per-pair
     vectors come from two corpus-scale equi-joins (AQE decides the
     strategy — no broadcast of anything that scales with the corpus)."""
-    from .dedup import _persist_tracked
-
     e = _emb(spark, sf_dir)
-    bits = _nd_bits_for(_emb_count(e, sf_dir))
+    # the bit width needs the corpus size at plan-construction time (the
+    # hyperplane tensor is baked into the UDF closure): one count job,
+    # memoized so the unified-graph queries pay it once; at warehouse
+    # scale table statistics give it
+    bits = _nd_bits_for(memo.get(spark, "emb_count",
+                                 (f"{sf_dir}/embeddings.parquet",), e.count))
     # persist: the signature table feeds both sides of the bucket
     # self-join — unpersisted, the Arrow-batched sign-projection pass
     # runs once per side (measured 2x the Python-boundary cost)
-    sigs = _persist_tracked(lsh_bucket_signatures(e, bits=bits,
-                                                  tables=ND_LSH_TABLES,
-                                                  with_vectors=False))
+    sigs = memo.persist(lsh_bucket_signatures(e, bits=bits,
+                                              tables=ND_LSH_TABLES,
+                                              with_vectors=False))
     s1 = sigs.select(F.col("vec_id").alias("id1"), "table", "bucket")
     s2 = sigs.select(F.col("vec_id").alias("id2"), "table", "bucket")
     cand = (s1.join(s2, ["table", "bucket"])
@@ -502,9 +492,6 @@ def _adc_lut_sqdist(q_sub: list[float], codeword: list[float]) -> float:
     return acc
 
 
-_PQ_CACHE: dict[str, list[list[list[float]]]] = {}
-
-
 def _pq_vec_batch(pdf, centroids: "np.ndarray | None"):
     """Stacked float64 batch [+ coarse cell + residual subtraction] —
     the shared corpus-side preamble of training and encoding. With
@@ -614,16 +601,15 @@ def _pq_encode_df(e: DataFrame, books: list,
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
-    if sf_dir in _PQ_CACHE:
-        return _PQ_CACHE[sf_dir]
-    e = _emb(spark, sf_dir)
-    seeds = (e.filter((F.col("vec_id") >= _PQ_SEED_BASE)
-                      & (F.col("vec_id") < _PQ_SEED_BASE + PQ_KSUB))
-             .orderBy("vec_id").collect())
-    seed_vecs = np.stack([np.asarray(r["embedding"], dtype=np.float64)
-                          for r in seeds])
-    _PQ_CACHE[sf_dir] = _pq_train_books(e, seed_vecs)
-    return _PQ_CACHE[sf_dir]
+    def build():
+        e = _emb(spark, sf_dir)
+        seeds = (e.filter((F.col("vec_id") >= _PQ_SEED_BASE)
+                          & (F.col("vec_id") < _PQ_SEED_BASE + PQ_KSUB))
+                 .orderBy("vec_id").collect())
+        seed_vecs = np.stack([np.asarray(r["embedding"], dtype=np.float64)
+                              for r in seeds])
+        return _pq_train_books(e, seed_vecs)
+    return memo.get(spark, "pq_books", (f"{sf_dir}/embeddings.parquet",), build)
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -681,9 +667,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the bounded shortlist window.
 # ---------------------------------------------------------------------------
 
-_IVFPQ_CACHE: dict[str, tuple] = {}
-
-
 def _ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple:
     """(coarse centroids, residual PQ codebooks) — the trained index.
     Training cost: the fused assign+residual+partial-sum numpy pass per
@@ -691,25 +674,24 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple:
     x DSUB codewords, never corpus-sized. Seed codewords are the seed
     vectors' own residuals (cells computed driver-side with the
     identical numpy math)."""
-    if sf_dir in _IVFPQ_CACHE:
-        return _IVFPQ_CACHE[sf_dir]
-    e = _emb(spark, sf_dir)
-    cent_rows = (e.filter((F.col("vec_id") >= _IVF_CENTROID_BASE)
-                          & (F.col("vec_id") < _IVF_CENTROID_BASE + IVF_CELLS))
+    def build():
+        e = _emb(spark, sf_dir)
+        cent_rows = (e.filter((F.col("vec_id") >= _IVF_CENTROID_BASE)
+                              & (F.col("vec_id") < _IVF_CENTROID_BASE + IVF_CELLS))
+                     .orderBy("vec_id").collect())
+        centroids = np.stack([np.asarray(r["embedding"], dtype=np.float64)
+                              for r in cent_rows])
+        seeds = (e.filter((F.col("vec_id") >= _PQ_SEED_BASE)
+                          & (F.col("vec_id") < _PQ_SEED_BASE + PQ_KSUB))
                  .orderBy("vec_id").collect())
-    centroids = np.stack([np.asarray(r["embedding"], dtype=np.float64)
-                          for r in cent_rows])
-    seeds = (e.filter((F.col("vec_id") >= _PQ_SEED_BASE)
-                      & (F.col("vec_id") < _PQ_SEED_BASE + PQ_KSUB))
-             .orderBy("vec_id").collect())
-    sv = np.stack([np.asarray(r["embedding"], dtype=np.float64)
-                   for r in seeds])
-    cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-    svn = sv / np.linalg.norm(sv, axis=1, keepdims=True)
-    seed_cells = np.argsort(-(svn @ cn.T), axis=1, kind="stable")[:, 0]
-    books = _pq_train_books(e, sv - centroids[seed_cells], centroids)
-    _IVFPQ_CACHE[sf_dir] = (centroids, books)
-    return _IVFPQ_CACHE[sf_dir]
+        sv = np.stack([np.asarray(r["embedding"], dtype=np.float64)
+                       for r in seeds])
+        cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
+        svn = sv / np.linalg.norm(sv, axis=1, keepdims=True)
+        seed_cells = np.argsort(-(svn @ cn.T), axis=1, kind="stable")[:, 0]
+        books = _pq_train_books(e, sv - centroids[seed_cells], centroids)
+        return centroids, books
+    return memo.get(spark, "ivfpq_index", (f"{sf_dir}/embeddings.parquet",), build)
 
 
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,13 +783,6 @@ def _kmeans_assign(xcol, centroids: list[list[float]]):
         for k, d in enumerate(dists)]))
 
 
-# Centroids are plain Python floats (no Spark state), so the memo is
-# valid across sessions; keyed by sf_dir like _EMB_COUNT_CACHE so the
-# two consumers (emb_kmeans, emb_semdedup) and bench/driver/pytest all
-# pay the KMEANS_ITERS aggregation jobs once per corpus.
-_KMEANS_CACHE: dict[str, list[list[float]]] = {}
-
-
 def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """Lloyd iterations, the canonical Spark shape: per iteration ONE
     map-side-combinable hash aggregate (K x (DIM+1) cells — 64 BIGINT
@@ -815,30 +790,30 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     K, never by the corpus), and new centroid literals broadcast into
     the next iteration's map-only assignment. KMEANS_ITERS scans total;
     nothing driver-side scales with the data. At warehouse scale the
-    seed pick moves to kmeans|| init; the iteration shape is unchanged."""
-    if sf_dir in _KMEANS_CACHE:
-        return _KMEANS_CACHE[sf_dir]
-    e = _emb(spark, sf_dir)
-    seeds = (e.filter((F.col("vec_id") >= KMEANS_SEED_BASE)
-                      & (F.col("vec_id") < KMEANS_SEED_BASE + KMEANS_K))
-             .orderBy("vec_id").collect())
-    cent = [[float(x) for x in r["embedding"]] for r in seeds]
-    x = F.col("embedding").cast("array<double>")
-    for _ in range(KMEANS_ITERS):
-        xq = F.transform(x, lambda v: (v * F.lit(float(KMEANS_Q))).cast("long"))
-        rows = (e.select(_kmeans_assign(x, cent)["k"].alias("c"),
-                         xq.alias("xq"))
-                .groupBy("c")
-                .agg(F.count("*").alias("n"),
-                     *[F.sum(F.col("xq")[j]).alias(f"s{j}")
-                       for j in range(KMEANS_DIM)])
-                .collect())
-        for r in rows:   # empty clusters keep their previous centroid
-            n = r["n"]
-            cent[r["c"]] = [r[f"s{j}"] / (n * float(KMEANS_Q))
-                            for j in range(KMEANS_DIM)]
-    _KMEANS_CACHE[sf_dir] = cent
-    return cent
+    seed pick moves to kmeans|| init; the iteration shape is unchanged.
+    Memoized: emb_kmeans and emb_semdedup share one training."""
+    def build():
+        e = _emb(spark, sf_dir)
+        seeds = (e.filter((F.col("vec_id") >= KMEANS_SEED_BASE)
+                          & (F.col("vec_id") < KMEANS_SEED_BASE + KMEANS_K))
+                 .orderBy("vec_id").collect())
+        cent = [[float(x) for x in r["embedding"]] for r in seeds]
+        x = F.col("embedding").cast("array<double>")
+        for _ in range(KMEANS_ITERS):
+            xq = F.transform(x, lambda v: (v * F.lit(float(KMEANS_Q))).cast("long"))
+            rows = (e.select(_kmeans_assign(x, cent)["k"].alias("c"),
+                             xq.alias("xq"))
+                    .groupBy("c")
+                    .agg(F.count("*").alias("n"),
+                         *[F.sum(F.col("xq")[j]).alias(f"s{j}")
+                           for j in range(KMEANS_DIM)])
+                    .collect())
+            for r in rows:   # empty clusters keep their previous centroid
+                n = r["n"]
+                cent[r["c"]] = [r[f"s{j}"] / (n * float(KMEANS_Q))
+                                for j in range(KMEANS_DIM)]
+        return cent
+    return memo.get(spark, "kmeans_centroids", (f"{sf_dir}/embeddings.parquet",), build)
 
 
 def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -866,15 +841,13 @@ def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _nd_bits_for; with tight production clusters the within-cluster
     candidates can further drop to the LSH tier (lsh_bucket_signatures)
     unchanged. Nothing corpus-sized is broadcast or collected."""
-    from .dedup import _persist_tracked
-
     e = _emb(spark, sf_dir)
     cent = _kmeans_centroids(spark, sf_dir)
     x = F.col("embedding").cast("array<double>")
     # persist: assigned feeds both sides of the within-cluster self-join
     # AND the final output join — one K x 64-dim assignment fold pass,
     # not three
-    assigned = _persist_tracked(
+    assigned = memo.persist(
         e.select("vec_id", x.alias("x"),
                  _kmeans_assign(x, cent)["k"].alias("cluster")))
     a = assigned.select(F.col("vec_id").alias("id1"), F.col("x").alias("v1"),

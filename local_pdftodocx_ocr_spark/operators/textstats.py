@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
+
 _STOPWORDS = ("the", "a", "an", "of", "and", "to", "in", "is", "for", "with")
 
 
@@ -20,7 +22,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that already parallelizes — see sources.tables.spread_scan
     from ..sources.tables import spread_scan
     path = f"{sf_dir}/documents.parquet"
-    return spread_scan(spark, spark.read.parquet(path), key=path)
+    return spread_scan(spark, spark.read.parquet(path), path)
 
 
 # ---------------------------------------------------------------------------
@@ -1198,7 +1200,7 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     from ..functions.hashing import md5_60bit
-    from .dedup import _distinct_shingles, _persist_tracked
+    from .dedup import _distinct_shingles
 
     d = _docs(spark, sf_dir)
     sh = (_distinct_shingles(d, key="source")
@@ -1208,7 +1210,7 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (srcs, both pair joins) must NOT each replay the corpus-wide
     # shingle scan + window — one scan builds the sketch, everything
     # after reads <= n_sources*k cached rows
-    sk = _persist_tracked(
+    sk = memo.persist(
         sh.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= KMVO_K).select("source", "h"))
     srcs = sk.select("source").distinct()
@@ -1970,10 +1972,8 @@ PPL_MAX_BIN = 1023
 
 
 def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import _persist_tracked
-
     bl = bigram_loglik(spark, sf_dir).filter(F.col("n_bigrams") > 0)
-    binned = _persist_tracked(bl.select(
+    binned = memo.persist(bl.select(
         "doc_id",
         F.least(F.floor(-F.col("avg_log2_prob") * PPL_BIN_SCALE),
                 F.lit(PPL_MAX_BIN).cast("long")).alias("bin")))
@@ -2234,20 +2234,13 @@ def _hh_positions(gcol) -> list:
             for i in range(CMS_D)]
 
 
-# The materialized sketch is 4096 ints — bounded driver state at any
-# corpus size (the IVF-centroid / k-means precedent). Memoized per
-# (corpus, width) so the screen pass and its consumers pay the build
-# scan once per session; keying on the width keeps the monkeypatched
-# collision-saturation test isolated.
-_HH_CELLS_CACHE: dict[tuple[str, int], tuple[list[list[int]], int]] = {}
-
-
 def _hh_cells(spark: SparkSession, sf_dir: str) -> tuple[list[list[int]], int]:
     """ONE corpus pass: dense CMS_D x CMS_W counts plus the stream total
     (= sum of any one row). Collecting <=4096 rows replaces 5 lazy
-    re-scans (4 per-row broadcast builds + the total) with literals."""
-    key = (sf_dir, CMS_W)
-    if key not in _HH_CELLS_CACHE:
+    re-scans (4 per-row broadcast builds + the total) with literals.
+    The sketch is bounded driver state, memoized per corpus and width
+    (the width keeps the monkeypatched collision test isolated)."""
+    def build():
         pos = _hh_positions(F.col("g"))
         rows = (_hh_grams(spark, sf_dir)
                 .select(F.posexplode(F.array(*pos)).alias("i", "b"))
@@ -2256,8 +2249,9 @@ def _hh_cells(spark: SparkSession, sf_dir: str) -> tuple[list[list[int]], int]:
         dense = [[0] * CMS_W for _ in range(CMS_D)]
         for r in rows:
             dense[r["i"]][r["b"]] = r["c"]
-        _HH_CELLS_CACHE[key] = (dense, sum(dense[0]))
-    return _HH_CELLS_CACHE[key]
+        return dense, sum(dense[0])
+    return memo.get(spark, "hh_cells", (f"{sf_dir}/documents.parquet",),
+                    build, (CMS_W,))
 
 
 def _hh_screened(spark: SparkSession, sf_dir: str) -> DataFrame:

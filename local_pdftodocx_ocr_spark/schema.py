@@ -26,18 +26,6 @@ DOCS_SCHEMA = T.StructType(
     ]
 )
 
-# Lineage/metrics rows, one per task partition (north rule:
-# "(partition_id, docs_in, docs_out, checksum, wall_ms)").
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("docs_in", T.LongType(), False),
-        T.StructField("docs_out", T.LongType(), False),
-        T.StructField("checksum", T.StringType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
-    ]
-)
-
 # Unified schema emitted by the single-pass extraction UDF; rows are
 # routed by row_type ('doc' | 'quarantine' | 'lineage') so one mapInArrow
 # pass yields both the spans table and the lineage table without a second
@@ -55,16 +43,3 @@ UNIFIED_SCHEMA = T.StructType(
     ]
 )
 
-# Flat (exploded) span rows — the shape used for oracle comparison.
-FLAT_SPANS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("offset", T.IntegerType(), False),
-    ]
-)
-
-DDL_SPAN = "kind string, text string, media_ref string, offset int"
-DDL_DOCS = f"doc_id string, spans array<struct<{DDL_SPAN}>>"

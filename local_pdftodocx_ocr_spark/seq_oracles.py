@@ -11,7 +11,9 @@ and the full extraction pipeline over the documents table.
 
 The driver runs correctness at sf0.01; ``ORACLE_SF_DIR`` pins the same
 tables (override with $SPARK_GRAFT_ORACLE_SF_DIR if the harness ever
-moves). All functions are deterministic and cached per process.
+moves). All functions are deterministic; the table readers and the
+trained indexes are cached per sf_dir and input fingerprint (see
+``_per_input``), so a table rewritten in place is read again.
 
 Float discipline: Spark-side cosine is a strict left fold of doubles
 (``F.aggregate(zip_with(...), 0.0, acc+v)``); the oracles reproduce the
@@ -26,7 +28,9 @@ import hashlib
 import math
 import os
 from decimal import ROUND_HALF_UP, Decimal
-from functools import lru_cache
+from functools import lru_cache, wraps
+
+from .memo import fingerprint
 
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR",
                                "/root/testdata/sf0.01")
@@ -74,7 +78,20 @@ def spark_round(x: float, scale: int) -> float:
     return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
 
 
-@lru_cache(maxsize=4)
+def _per_input(table: str):
+    """lru_cache per sf_dir AND the fingerprint of the table the
+    function reads (``{sf_dir}/{table}.parquet``)."""
+    def deco(fn):
+        cached = lru_cache(maxsize=4)(lambda sf_dir, _fp: fn(sf_dir))
+
+        @wraps(fn)
+        def wrapper(sf_dir: str):
+            return cached(sf_dir, fingerprint(f"{sf_dir}/{table}.parquet"))
+        return wrapper
+    return deco
+
+
+@_per_input("documents")
 def _documents(sf_dir: str) -> tuple[tuple[int, str], ...]:
     import duckdb
     rows = duckdb.connect().execute(
@@ -83,7 +100,7 @@ def _documents(sf_dir: str) -> tuple[tuple[int, str], ...]:
     return tuple((int(d), t) for d, t in rows)
 
 
-@lru_cache(maxsize=4)
+@_per_input("embeddings")
 def _embeddings(sf_dir: str) -> tuple[tuple[int, tuple[float, ...], int], ...]:
     import duckdb
     rows = duckdb.connect().execute(
@@ -347,7 +364,7 @@ def _seq_pq_codes(vmat, books) -> "list[list[int]]":
             for i in range(len(vmat))]
 
 
-@lru_cache(maxsize=4)
+@_per_input("embeddings")
 def _seq_pq_codebooks(sf_dir: str) -> tuple:
     import numpy as np
 
@@ -403,7 +420,7 @@ def ann_pq_values_sql(sf_dir: str = ORACLE_SF_DIR) -> str:
 # ---------------------------------------------------------------------------
 
 
-@lru_cache(maxsize=4)
+@_per_input("embeddings")
 def _seq_ivfpq_index(sf_dir: str) -> tuple:
     import numpy as np
 
@@ -527,7 +544,7 @@ def _seq_assign(e, cent) -> tuple[float, int]:
     return best
 
 
-@lru_cache(maxsize=4)
+@_per_input("embeddings")
 def _seq_kmeans_centroids(sf_dir: str) -> tuple[tuple[float, ...], ...]:
     from .operators import similarity as sim
     data = _embeddings(sf_dir)

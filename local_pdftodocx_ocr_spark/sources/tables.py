@@ -9,28 +9,14 @@ relies on Catalyst for pushdown/pruning — readers never .cache() or
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import memo
 from ..schema import DOCS_SCHEMA
-
-TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
-               "orders", "lineitem")
-AUX_TABLES = ("events", "documents", "embeddings")
-
-
-# The scan-parallelism probe (df.rdd.getNumPartitions) costs a full
-# physical-planning round trip on the driver, and every query
-# construction pays it again for the same input. The partition count of
-# a parquet path is a property of the files + session config, so it is
-# memoized per (application, path); callers without a stable path key
-# keep probing directly.
-_SCAN_PARTS: dict[tuple[str, str], int] = {}
 
 
 def spread_scan(spark: SparkSession, df: DataFrame,
-                key: str | None = None) -> DataFrame:
+                path: str | None = None) -> DataFrame:
     """Repartition a scan ONLY when it is under-parallel.
 
     Local small-file reality: a single-row-group parquet file scans as
@@ -42,27 +28,14 @@ def spread_scan(spark: SparkSession, df: DataFrame,
     has fewer partitions than the cluster's parallelism (the plan test
     pins that a pre-partitioned input produces no REPARTITION node).
 
-    ``key`` (normally the parquet path) memoizes the partition-count
-    probe per session — see _SCAN_PARTS."""
-    target = spark.sparkContext.defaultParallelism
-    if key is not None:
-        ck = (spark.sparkContext.applicationId, key)
-        n = _SCAN_PARTS.get(ck)
-        if n is None:
-            n = df.rdd.getNumPartitions()
-            _SCAN_PARTS[ck] = n
-    else:
-        n = df.rdd.getNumPartitions()
-    if n < target:
-        return df.repartition(target)
+    The partition-count probe costs a physical-planning round trip;
+    with ``path`` (the parquet path ``df`` reads) it is memoized per
+    file contents."""
+    n = (memo.get(spark, "scan_parts", (path,), lambda: df.rdd.getNumPartitions())
+         if path else df.rdd.getNumPartitions())
+    if n < spark.sparkContext.defaultParallelism:
+        return df.repartition(spark.sparkContext.defaultParallelism)
     return df
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One of the driver's benchmark tables by name."""
-    if name not in TPCH_TABLES + AUX_TABLES:
-        raise KeyError(f"unknown table {name!r}")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def empty_docs(spark: SparkSession) -> DataFrame:

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from local_pdftodocx_ocr_spark import memo
 from local_pdftodocx_ocr_spark.operators import dedup, similarity
 from local_pdftodocx_ocr_spark.plans import asserts as plans
 
@@ -34,36 +35,37 @@ class TestMinhashLSH:
         """The candidate queries persist() their signature tables; a
         repeated caller (the 4x dedup-scale bench, plan dumps) must be
         able to drop them deterministically instead of waiting on
-        ContextCleaner GC — persist() calls register in _LIVE_CACHES
-        and release_caches() empties the registry and the storage."""
-        dedup.release_caches()
+        ContextCleaner GC — memo.persist tracks them and memo.release()
+        empties the registry and the storage."""
+        memo.release()
         dedup.dedup_minhash_candidates(spark, SF_DIR).count()
         dedup.dedup_simhash_candidates(spark, SF_DIR).count()
-        # r7: minhash registers 3 caches (raw hashed shingles, the
-        # df-capped index, the signature table), simhash 1
-        assert len(dedup._LIVE_CACHES) == 4
-        assert all(df.is_cached for df in dedup._LIVE_CACHES)
-        assert dedup._SHINGLE_MEMO, "capped shingles should be memoized"
-        tracked = list(dedup._LIVE_CACHES)
-        assert dedup.release_caches(blocking=True) == 4
-        assert not dedup._LIVE_CACHES
+        # minhash registers 3 caches (raw hashed shingles, the df-capped
+        # index, the signature table), simhash 1
+        tracked = list(memo._persisted)
+        assert len(tracked) == 4
+        assert all(df.is_cached for df in tracked)
+        assert "capped_shingles" in {slot[0] for slot in memo._entries}, \
+            "capped shingles should be memoized"
+        assert memo.release(blocking=True) == 4
+        assert not memo._persisted
         assert not any(df.is_cached for df in tracked)
-        # the memo dies with the caches it points at (a stale entry
+        # the memo entry dies with the cache it hands out (a stale entry
         # would silently recompute the shingle pass once per branch)
-        assert not dedup._SHINGLE_MEMO
+        assert "capped_shingles" not in {slot[0] for slot in memo._entries}
 
     def test_capped_shingles_shared_within_query(self, spark):
-        """r7: the tokenize->shingle->md5->df-cap subtree feeds many
-        plan branches (sizes + both self-join sides + verify joins);
-        unmemoized it recomputed once per branch — the round-6
-        docs_dedup_jaccard_pairs plan scanned documents.parquet 8x.
-        Every caller handing in the same input plan must get the SAME
-        persisted table back."""
-        dedup.release_caches()
+        """The tokenize->shingle->md5->df-cap subtree feeds many plan
+        branches (sizes + both self-join sides + verify joins);
+        unmemoized it recomputed once per branch (the
+        docs_dedup_jaccard_pairs plan scanned documents.parquet 8x).
+        Every caller reading the same documents table must get the
+        SAME persisted table back."""
+        memo.release()
         a = dedup._hashed_capped_shingles(dedup._docs(spark, SF_DIR))
         b = dedup._hashed_capped_shingles(dedup._docs(spark, SF_DIR))
         assert a is b, "shingle index must be shared across plan branches"
-        dedup.release_caches()
+        memo.release()
 
 
 class TestSimhash:
@@ -194,14 +196,20 @@ class TestSpreadScan:
         assert d.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
     def test_prepartitioned_input_has_no_repartition(self, spark, tmp_path):
+        """Also with the memoized probe: a path rewritten in place from
+        one file to many is probed again, not served its old count."""
         from local_pdftodocx_ocr_spark.sources.tables import spread_scan
         p = spark.sparkContext.defaultParallelism
         out = str(tmp_path / "docs")
-        (spark.read.parquet(f"{SF_DIR}/documents.parquet")
-         .repartition(p * 2).write.parquet(out))
-        df = spread_scan(spark, spark.read.parquet(out))
-        assert plans.count_exchanges(df) == 0, plans.executed_plan(df)
-        assert df.rdd.getNumPartitions() >= p
+        src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        src.coalesce(1).write.parquet(out)
+        assert plans.count_exchanges(
+            spread_scan(spark, spark.read.parquet(out), out)) == 1
+        src.repartition(p * 2).write.mode("overwrite").parquet(out)
+        for df in (spread_scan(spark, spark.read.parquet(out)),
+                   spread_scan(spark, spark.read.parquet(out), out)):
+            assert plans.count_exchanges(df) == 0, plans.executed_plan(df)
+            assert df.rdd.getNumPartitions() >= p
 
 
 class TestNearDupAtScale:
@@ -1433,13 +1441,13 @@ class TestDedupComponents:
 
 
 class TestUnifiedMemo:
-    """VERDICT r4 #3: the three-tier candidate graph + star-CC must run
-    ONCE per session when all three consumers (components, canonical
-    keep, cluster sizes) execute back-to-back — the labels are shared
-    via a per-(application, sf_dir) localCheckpoint memo."""
+    """The three-tier candidate graph + star-CC must run ONCE per
+    session when all three consumers (components, canonical keep,
+    cluster sizes) execute back-to-back — the labels are shared via a
+    localCheckpoint memo entry."""
 
     def test_graph_computed_once_for_trio(self, spark):
-        dedup.clear_unified_memo()
+        memo.clear()
         before = dedup.UNIFIED_GRAPH_RUNS
         comp = dedup.dedup_components_unified(spark, SF_DIR).collect()
         keep = dedup.dedup_canonical_keep(spark, SF_DIR).collect()
@@ -1451,11 +1459,11 @@ class TestUnifiedMemo:
         assert sum(r["n_docs"] for r in sizes) == len(comp)
 
     def test_memo_cleared_forces_recompute(self, spark):
-        dedup.clear_unified_memo()
+        memo.clear()
         before = dedup.UNIFIED_GRAPH_RUNS
         a = {tuple(r) for r in
              dedup.dedup_components_unified(spark, SF_DIR).collect()}
-        dedup.clear_unified_memo()
+        memo.clear()
         b = {tuple(r) for r in
              dedup.dedup_components_unified(spark, SF_DIR).collect()}
         assert dedup.UNIFIED_GRAPH_RUNS - before == 2

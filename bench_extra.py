@@ -9,6 +9,7 @@ dumps .explain("formatted") to a directory.
     python bench_extra.py --all
     python bench_extra.py --plans plans/r07 --suffix _before docs_dedup_jaccard_pairs
     python bench_extra.py --worker-overhead
+    python bench_extra.py --run-job
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32), BENCH_EXTRA_REPS (default 3).
@@ -101,6 +102,89 @@ def worker_overhead(reps: int) -> dict:
             "python": sys.version.split()[0]}
 
 
+def _flat_feed(out_dir: str, seed: int = 7, batches: int = 3, docs: int = 800,
+               replay: float = 0.10) -> list[str]:
+    """Ingest-shaped jsonl batches of flat (doc_id, text) web docs in
+    disjoint id ranges; every batch after the first replays `replay` of
+    the ids already sent."""
+    import random
+
+    rng = random.Random(seed)
+    words = ("spark window merge table column vector stream value data join "
+             "filter group hash sort order row key query scan batch").split()
+    sent, paths = [], []
+    for b in range(batches):
+        rows = [{"doc_id": b * 10 * docs + i,
+                 "text": " ".join(rng.choices(words, k=rng.randint(10, 89)))}
+                for i in range(docs)]
+        batch = rows + (rng.sample(sent, int(replay * docs)) if sent else [])
+        rng.shuffle(batch)
+        paths.append(os.path.join(out_dir, f"batch-{b:03d}.jsonl"))
+        with open(paths[-1], "w", encoding="utf-8") as f:
+            f.writelines(json.dumps(r) + "\n" for r in batch)
+        sent.extend(rows)
+    return paths
+
+
+def run_job_cost(reps: int) -> dict:
+    """run_job's per-batch cost in one warmed local[4] session, per
+    case: ingest-shaped flat batches into a new table (fresh) and into
+    a table holding the earlier batches (resumed, 10% replays), and the
+    4,000-doc skewed corpus into a new table. Each wall times the input
+    read plus run_job; Spark jobs and SQL executions are counted per
+    run_job."""
+    import itertools
+    import shutil
+    import statistics
+    import tempfile
+
+    from local_pdftodocx_ocr_spark import synth
+    from local_pdftodocx_ocr_spark.sources.tables import read_corpus_input
+
+    work = tempfile.mkdtemp(prefix="bench-run-job-")
+    spark = job.build_session(4, app="run-job-cost")
+    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    feed = _flat_feed(work)
+    corpus = os.path.join(work, "extract.parquet")
+    job.docs_df_from_corpus(spark, synth.gen_corpus(4000, seed=7, skew=True)) \
+        .write.parquet(corpus)
+    cases: dict[str, dict] = {c: {"walls": [], "jobs": 0, "sql": 0}
+                              for c in ("ingest_fresh", "ingest_resumed", "extract_skewed")}
+    groups = itertools.count()
+
+    def timed(case: str, rep: int, docs, table: str) -> None:
+        group = f"run-job-{next(groups)}"
+        sc.setJobGroup(group, group)
+        sql0 = sql_store.executionsCount()
+        t0 = time.perf_counter()
+        job.run_job(spark, docs(), table)
+        wall = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        if rep >= 0:
+            c = cases[case]
+            c["walls"].append(wall)
+            c["jobs"] += len(sc.statusTracker().getJobIdsForGroup(group))
+            c["sql"] += sql_store.executionsCount() - sql0
+
+    for rep in range(-3, reps):     # three warm-up rounds
+        table = os.path.join(work, f"ingest-{rep}")
+        for i, path in enumerate(feed):
+            timed("ingest_resumed" if i else "ingest_fresh", rep, lambda p=path:
+                  job.interleaved_docs_from_flat(read_corpus_input(spark, p)), table)
+        table = os.path.join(work, f"extract-{rep}")
+        timed("extract_skewed", rep, lambda: read_corpus_input(spark, corpus), table)
+    spark.stop()
+    shutil.rmtree(work, ignore_errors=True)
+    return {case: {"median_s": round(statistics.median(c["walls"]), 4),
+                   "min_s": round(min(c["walls"]), 4),
+                   "jobs_per_run_job": c["jobs"] / len(c["walls"]),
+                   "sql_per_run_job": c["sql"] / len(c["walls"]),
+                   "run_jobs": len(c["walls"])}
+            for case, c in cases.items()}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
@@ -112,11 +196,19 @@ def main() -> int:
                     help="time a warmed no-op mapInArrow over 16 partitions "
                          "on local[4]: wall, per-task worker CPU and zip "
                          "directory reads per task")
+    ap.add_argument("--run-job", action="store_true",
+                    help="time run_job in one warmed local[4] session on "
+                         "fresh and resumed ingest-shaped flat batches and "
+                         "on the 4,000-doc skewed corpus: median and min "
+                         "wall, Spark jobs and SQL executions per run_job")
     ap.add_argument("--reps", type=int,
                     default=int(os.environ.get("BENCH_EXTRA_REPS", "3")))
     args = ap.parse_args()
     if args.worker_overhead:
         print(json.dumps(worker_overhead(args.reps)))
+        return 0
+    if args.run_job:
+        print(json.dumps(run_job_cost(args.reps)))
         return 0
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

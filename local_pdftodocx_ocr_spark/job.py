@@ -21,10 +21,11 @@ Physical plan (designed for 1000 executors / 100 TB; tested on local[N]):
                                                 one batched recognize call
                                                 per record batch, plus one
                                                 lineage row per partition
-  write parquet snapshot -> atomic commit    -- idempotent restart point
-  collect the P lineage rows                 -- ONE Spark job; docs_in/out
-                                                and the checksum fold are
-                                                summed on the driver
+  write parquet snapshot -> atomic commit    -- idempotent restart point;
+                                                each lineage row's totals
+                                                also go to a per-run
+                                                accumulator, which run_job
+                                                returns: no read-back job
 
 No per-row Python anywhere: documents cross the Python boundary once, as
 Arrow record batches, and come back as record batches built directly
@@ -37,9 +38,11 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Iterator
+from functools import partial
 
 import pyarrow as pa
-from pyspark import TaskContext
+from pyspark import Accumulator, AccumulatorParam, TaskContext
+from pyspark.accumulators import _accumulatorRegistry
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -97,14 +100,27 @@ def _recognized(spans_col: list) -> dict[str, str]:
     return dict(zip(refs, kernels.recognize_batch(refs)))
 
 
-def _unified_rows(results: Iterator[list[tuple]],
-                  partition_offset: int = 0) -> Iterator[pa.RecordBatch]:
+class _TotalsParam(AccumulatorParam):
+    """``(docs_in, docs_out, checksum, partitions)``: counts add, the
+    checksum folds as kernels.combine_checksums does."""
+
+    def zero(self, value):
+        return (0, 0, 0, 0)
+
+    def addInPlace(self, a, b):
+        return (a[0] + b[0], a[1] + b[1], (a[2] + b[2]) % kernels._CHECK_MOD,
+                a[3] + b[3])
+
+
+def _unified_rows(results: Iterator[list[tuple]], partition_offset: int = 0,
+                  totals: Accumulator | None = None) -> Iterator[pa.RecordBatch]:
     """The one emitter of unified rows. `results` yields, per input
     batch, a list of ``(doc_id, spans, checksum)``. A doc with spans
     becomes a doc row; a doc whose extraction came out empty becomes a
     quarantine row (null spans), which marks it processed so resume
     skips it without polluting the spans table. After the partition
-    drains, exactly one lineage row follows."""
+    drains, exactly one lineage row follows, and its totals are added
+    to `totals`."""
     ctx = TaskContext.get()
     partition_id = (ctx.partitionId() if ctx is not None else -1) + partition_offset
     t0 = time.monotonic()
@@ -120,6 +136,8 @@ def _unified_rows(results: Iterator[list[tuple]],
             row_type=["doc" if spans else "quarantine" for _, spans, _ in rows],
             doc_id=[doc_id for doc_id, _, _ in rows],
             spans=[spans or None for _, spans, _ in rows])
+    if totals is not None:
+        totals.add((docs_in, docs_out, acc, 1))
     yield _record_batch(
         _UNIFIED_ARROW, row_type=["lineage"], partition_id=[partition_id],
         docs_in=[docs_in], docs_out=[docs_out], checksum=[format(acc, "016x")],
@@ -136,7 +154,8 @@ def _spans_column(batch: pa.RecordBatch) -> list[list[dict]]:
             zip(batch.column("flat_id").to_pylist(), batch.column("text").to_pylist())]
 
 
-def extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def extract_batch(batches: Iterator[pa.RecordBatch],
+                  totals: Accumulator | None = None) -> Iterator[pa.RecordBatch]:
     """mapInArrow body. Per record batch: the spans (read, or
     synthesized from flat rows), one batched recognize call, then the
     per-document kernel pipeline. After the partition drains, exactly
@@ -152,12 +171,14 @@ def extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]
                              kernels.doc_checksum(doc_id, tuples) if tuples else 0))
             yield rows
 
-    return _unified_rows(results())
+    return _unified_rows(results(), totals=totals)
 
 
 def extract_spans(docs: DataFrame, num_partitions: int | None = None,
-                  salt: int = DEFAULT_SALT) -> DataFrame:
-    """docs (doc_id, spans) -> unified (doc rows + lineage rows).
+                  salt: int = DEFAULT_SALT,
+                  totals: Accumulator | None = None) -> DataFrame:
+    """docs (doc_id, spans) -> unified (doc rows + lineage rows);
+    `totals` accumulates the lineage rows' totals.
 
     The explicit ``repartition(P, xxhash64(doc_id, salt))`` is the north
     rule's skew defuse: doc_id ranges that hash hot (e.g. crawl shards
@@ -165,7 +186,8 @@ def extract_spans(docs: DataFrame, num_partitions: int | None = None,
     post-shuffle partitions."""
     n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
     salted = docs.repartition(n, F.xxhash64(F.col("doc_id"), F.lit(salt)))
-    return salted.mapInArrow(extract_batch, schema=UNIFIED_SCHEMA)
+    return salted.mapInArrow(partial(extract_batch, totals=totals),
+                             schema=UNIFIED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -217,14 +239,16 @@ def _finalize_group(table: pa.Table) -> pa.Table:
         _FINALIZED_ARROW, doc_id=[doc_id], spans=[tuples or None], checksum=[chk])])
 
 
-def _finalized_to_unified(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def _finalized_to_unified(batches: Iterator[pa.RecordBatch],
+                          totals: Accumulator | None = None) -> Iterator[pa.RecordBatch]:
     return _unified_rows(
         (list(zip(b.column("doc_id").to_pylist(), b.column("spans").to_pylist(),
                   b.column("checksum").to_pylist())) for b in batches),
-        _CHUNK_PARTITION_OFFSET)
+        _CHUNK_PARTITION_OFFSET, totals)
 
 
-def extract_spans_chunked(fat_docs: DataFrame, chunk_threshold: int) -> DataFrame:
+def extract_spans_chunked(fat_docs: DataFrame, chunk_threshold: int,
+                          totals: Accumulator | None = None) -> DataFrame:
     """(doc_id, spans) of oversized docs -> unified rows via the
     chunked two-phase plan: explode to span-chunks (pure JVM slice) ->
     route per chunk (mapInArrow) -> groupBy(doc_id) finalize
@@ -242,20 +266,22 @@ def extract_spans_chunked(fat_docs: DataFrame, chunk_threshold: int) -> DataFram
     routed = chunks.mapInArrow(_route_chunks, schema=_ROUTED_SCHEMA)
     finalized = routed.groupBy("doc_id").applyInArrow(
         _finalize_group, schema=_FINALIZED_SCHEMA)
-    return finalized.mapInArrow(_finalized_to_unified, schema=UNIFIED_SCHEMA)
+    return finalized.mapInArrow(partial(_finalized_to_unified, totals=totals),
+                                schema=UNIFIED_SCHEMA)
 
 
 def extract_spans_auto(docs: DataFrame, num_partitions: int | None = None,
                        salt: int = DEFAULT_SALT,
-                       chunk_threshold: int = 4096) -> DataFrame:
+                       chunk_threshold: int = 4096,
+                       totals: Accumulator | None = None) -> DataFrame:
     """Skew-complete extraction: normal docs through the single-pass
     salted-repartition plan, oversized docs (> chunk_threshold spans)
     through the chunked two-phase plan; one unified output."""
     sized = materialize_spans(docs).withColumn("_n", F.size("spans"))
     small = sized.filter(F.col("_n") <= chunk_threshold).drop("_n")
     fat = sized.filter(F.col("_n") > chunk_threshold).drop("_n")
-    return extract_spans(small, num_partitions, salt).unionByName(
-        extract_spans_chunked(fat, chunk_threshold))
+    return extract_spans(small, num_partitions, salt, totals).unionByName(
+        extract_spans_chunked(fat, chunk_threshold, totals))
 
 
 def split_unified(unified: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -264,22 +290,6 @@ def split_unified(unified: DataFrame) -> tuple[DataFrame, DataFrame]:
     lineage = (unified.filter(F.col("row_type") == "lineage")
                .select("partition_id", "docs_in", "docs_out", "checksum", "wall_ms"))
     return spans, lineage
-
-
-def snapshot_totals(spark: SparkSession, table, snapshot_id: str) -> dict:
-    """One committed extraction snapshot's totals in ONE Spark job: its
-    P lineage rows are collected once (read with the known schema, so
-    no inference job) and summed and checksum-folded on the driver."""
-    rows = (table.read_snapshot(spark, snapshot_id, UNIFIED_SCHEMA)
-            .filter(F.col("row_type") == "lineage")
-            .select("docs_in", "docs_out", "checksum").collect())
-    return {
-        "snapshot": snapshot_id,
-        "docs_in": sum(r["docs_in"] for r in rows),
-        "docs_out": sum(r["docs_out"] for r in rows),
-        "partitions": len(rows),
-        "checksum": kernels.combine_checksums(int(r["checksum"], 16) for r in rows),
-    }
 
 
 def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
@@ -298,7 +308,14 @@ def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
     backends satisfy the same contract (tests/test_catalog_contract).
 
     A `detections` side table is merged (inject_external_detections)
-    after the anti-join, so replayed docs skip the merge."""
+    after the anti-join, so replayed docs skip the merge.
+
+    Returns the run's totals, as its committed lineage rows sum them:
+    every lineage row also adds its totals to a per-run accumulator,
+    which the write's result stage merges once per partition (failed
+    attempts are dropped), so no read-back job is needed. The write and
+    commit jobs are described as ``run_job <snapshot id>: write`` and
+    ``...: commit``."""
     table = open_table(spark, out_root)
     if resume:
         done = table.committed_doc_ids(spark, UNIFIED_SCHEMA)
@@ -308,18 +325,30 @@ def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
         docs = inject_external_detections(docs, detections)
 
     snap_id, staging = table.begin()
+    sc = spark.sparkContext
+    totals = sc.accumulator((0, 0, 0, 0), _TotalsParam())
     if chunk_threshold:
         unified = extract_spans_auto(docs, num_partitions=num_partitions,
-                                     chunk_threshold=chunk_threshold)
+                                     chunk_threshold=chunk_threshold, totals=totals)
     else:
-        unified = extract_spans(docs, num_partitions=num_partitions)
+        unified = extract_spans(docs, num_partitions=num_partitions, totals=totals)
+    caller = sc.getLocalProperty("spark.job.description")
     try:
-        unified.write.mode("overwrite").parquet(staging)
-    except Exception:
-        table.abort(staging)
-        raise
-    table.commit(snap_id, staging, meta={"kind": "extract"})
-    return snapshot_totals(spark, table, snap_id)
+        sc.setJobDescription(f"run_job {snap_id}: write")
+        try:
+            unified.write.mode("overwrite").parquet(staging)
+        except Exception:
+            table.abort(staging)
+            raise
+        finally:   # PySpark keeps every registered accumulator otherwise
+            _accumulatorRegistry.pop(totals.aid, None)
+        sc.setJobDescription(f"run_job {snap_id}: commit")
+        table.commit(snap_id, staging, meta={"kind": "extract"})
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+    docs_in, docs_out, checksum, partitions = totals.value
+    return {"snapshot": snap_id, "docs_in": docs_in, "docs_out": docs_out,
+            "partitions": partitions, "checksum": format(checksum, "016x")}
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:

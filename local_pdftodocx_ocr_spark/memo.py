@@ -1,8 +1,8 @@
 """One registry for the state the operators reuse across plan branches
 and queries: trained indexes (PQ/IVF-PQ codebooks, k-means centroids,
-CMS cells), probes (corpus counts, scan partition counts) and shared
-subtrees (the persisted shingle index, the checkpointed component
-labels).
+CMS cells), probes (corpus counts, scan partition counts, parquet
+schemas) and shared subtrees (the persisted shingle index, the
+checkpointed component labels).
 
 An entry is keyed on (Spark application, name, input fingerprint,
 params). The fingerprint is each input path with the

@@ -53,9 +53,9 @@ def _docs(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
     # spread=False for queries whose first operation is itself a shuffle
     # with cheap map-side work (e.g. one md5 + partial agg): there the
     # repartition is a pure extra exchange at ANY scale.
-    from ..sources.tables import spread_scan
+    from ..sources.tables import read_parquet, spread_scan
     path = f"{sf_dir}/documents.parquet"
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     return spread_scan(spark, df, path) if spread else df
 
 

@@ -32,9 +32,9 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread an under-parallel local scan so the batched numpy
     # signature/scoring UDFs run on all cores; a no-op (no exchange) on
     # a scan that already parallelizes — see sources.tables.spread_scan
-    from ..sources.tables import spread_scan
+    from ..sources.tables import read_parquet, spread_scan
     path = f"{sf_dir}/embeddings.parquet"
-    return spread_scan(spark, spark.read.parquet(path), path)
+    return spread_scan(spark, read_parquet(spark, path), path)
 
 
 def _cosine(a, b):

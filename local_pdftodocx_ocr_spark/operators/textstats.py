@@ -20,9 +20,9 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread an under-parallel local scan before the CPU-heavy per-row
     # expressions (tokenize/shingle); a no-op (no exchange) on a scan
     # that already parallelizes — see sources.tables.spread_scan
-    from ..sources.tables import spread_scan
+    from ..sources.tables import read_parquet, spread_scan
     path = f"{sf_dir}/documents.parquet"
-    return spread_scan(spark, spark.read.parquet(path), path)
+    return spread_scan(spark, read_parquet(spark, path), path)
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,8 @@ relies on Catalyst for pushdown/pruning — readers never .cache() or
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import memo
@@ -36,6 +38,19 @@ def spread_scan(spark: SparkSession, df: DataFrame,
     if n < spark.sparkContext.defaultParallelism:
         return df.repartition(spark.sparkContext.defaultParallelism)
     return df
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized
+    per file contents: only the first read of a local table launches
+    the footer-inference job. A path with no local stat (a remote
+    table) infers on every read, so it is never read with a stale
+    schema."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    schema = memo.get(spark, "parquet_schema", (path,),
+                      lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def empty_docs(spark: SparkSession) -> DataFrame:
@@ -76,7 +91,7 @@ def read_corpus_input(spark: SparkSession, path: str,
         else:
             fmt = "parquet"
     if fmt == "parquet":
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     if fmt == "jsonl":
         return spark.read.schema(_FLAT_SCHEMA).json(path)
     if fmt == "csv":

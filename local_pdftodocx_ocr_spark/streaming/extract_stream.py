@@ -38,28 +38,23 @@ def run_streaming_extraction(spark: SparkSession, input_dir: str,
     history — same per-run semantics as the batch ``run_job``. An
     optional detections side table merges into every micro-batch before
     extraction, exactly like the batch path."""
-    from ..catalog import open_table
-
-    before = {s["id"] for s in open_table(spark, out_root).snapshots()}
+    runs: list[dict] = []
     stream = read_docs_stream(spark, input_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        job.run_job(batch_df.sparkSession, batch_df, out_root,
-                    resume=True, num_partitions=num_partitions,
-                    chunk_threshold=chunk_threshold, detections=detections)
+        runs.append(job.run_job(batch_df.sparkSession, batch_df, out_root,
+                                resume=True, num_partitions=num_partitions,
+                                chunk_threshold=chunk_threshold,
+                                detections=detections))
 
     q = (stream.writeStream.foreachBatch(process)
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
-
-    table = open_table(spark, out_root)
-    totals = [job.snapshot_totals(spark, table, s["id"])
-              for s in table.snapshots() if s["id"] not in before]
-    return {"docs_in": sum(t["docs_in"] for t in totals),
-            "docs_out": sum(t["docs_out"] for t in totals),
-            "snapshots": len(totals)}
+    return {"docs_in": sum(r["docs_in"] for r in runs),
+            "docs_out": sum(r["docs_out"] for r in runs),
+            "snapshots": len(runs)}
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,8 @@ committed as a quarantine row on both execution paths; no extraction
 plan crosses into Python through pandas, and a flat batch crosses once,
 after its resume anti-join, also with a detections merge; the JVM-side
 flat id equals the Python ``doc-%08d`` form; and ``run_job`` launches no
-more Spark jobs than the write plus a one-job lineage read-back need.
+more Spark jobs than its write needs: the lineage totals come from the
+extraction pass, not from a read-back.
 """
 
 from __future__ import annotations
@@ -173,16 +174,19 @@ def _jobs_launched(spark, group: str, fn) -> int:
 
 
 def test_run_job_spark_job_count(spark, tmp_path):
-    """Fresh table: the write's shuffle and write jobs plus ONE lineage
-    collect. Resumed: broadcasting the committed ids for the anti-join
-    adds one. No snapshot read may infer its schema, and the lineage
-    totals are one job."""
+    """Fresh table: the write's shuffle and write jobs; the chunked
+    plan's second shuffle adds one. Resumed: broadcasting the committed
+    ids for the anti-join adds one. No snapshot read may infer its
+    schema, and the lineage totals launch no job."""
     corpus = synth.gen_corpus(20)
-    out = str(tmp_path / "jobs")
+    assert max(len(spans) for _, spans in corpus) > 5
+    for chunk_threshold, fresh, resumed in ((None, 2, 3), (5, 3, 4)):
+        out = str(tmp_path / f"jobs-{chunk_threshold}")
 
-    def run(docs):
-        return lambda: job.run_job(spark, job.docs_df_from_corpus(spark, docs), out,
-                                   num_partitions=4)
+        def run(docs):
+            return lambda: job.run_job(spark, job.docs_df_from_corpus(spark, docs), out,
+                                       num_partitions=4, chunk_threshold=chunk_threshold)
 
-    assert _jobs_launched(spark, "run_job-fresh", run(corpus[:10])) <= 3
-    assert _jobs_launched(spark, "run_job-resumed", run(corpus)) <= 4
+        tag = f"run_job-{chunk_threshold}"
+        assert _jobs_launched(spark, f"{tag}-fresh", run(corpus[:10])) <= fresh
+        assert _jobs_launched(spark, f"{tag}-resumed", run(corpus)) <= resumed

@@ -14,6 +14,7 @@ import duckdb
 from local_pdftodocx_ocr_spark import memo, seq_oracles
 from local_pdftodocx_ocr_spark.operators import dedup, similarity, textstats
 from local_pdftodocx_ocr_spark.plans import asserts as plans
+from local_pdftodocx_ocr_spark.sources.tables import read_corpus_input
 
 SF_DIR = seq_oracles.ORACLE_SF_DIR
 SF_SMALL = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
@@ -85,9 +86,31 @@ def test_clear_retrains_kmeans_and_release_keeps_it(spark):
 
     build("memo-kmeans-warm")
     memo.release()
-    warm = build("memo-kmeans-released")   # the parquet read's own job
+    warm = build("memo-kmeans-released")   # 0: the read's schema is memoized too
     memo.clear()
     assert build("memo-kmeans-cleared") >= warm + similarity.KMEANS_ITERS
+
+
+def test_parquet_schema_is_inferred_once_per_file(spark, tmp_path):
+    """Only the first read of a local parquet table infers its schema
+    (one job); a same-path rewrite infers again. A path with no local
+    stat infers on every read."""
+    path = str(tmp_path / "docs.parquet")
+    read = []
+
+    def reads(group):
+        return _jobs_launched(spark, group, lambda: read.append(
+            read_corpus_input(spark, path)))
+
+    spark.createDataFrame([(1, "a b")], "doc_id long, text string").write.parquet(path)
+    assert reads("schema-first") == 1
+    assert reads("schema-again") == 0
+    spark.createDataFrame([(1, "a b", "en")], "doc_id long, text string, lang string") \
+        .write.mode("overwrite").parquet(path)
+    assert reads("schema-rewritten") == 1
+    assert read[-1].columns == ["doc_id", "text", "lang"]
+    path = "file://" + path
+    assert reads("schema-uri") == reads("schema-uri-again") == 1
 
 
 def test_same_path_rewrite_matches_fresh_oracles(spark, tmp_path):

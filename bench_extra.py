@@ -126,13 +126,40 @@ def _flat_feed(out_dir: str, seed: int = 7, batches: int = 3, docs: int = 800,
     return paths
 
 
+def _tree_cpu_s(jvm_pid: int) -> tuple[float, float]:
+    """CPU-s used so far by the JVM (its threads and its reaped child
+    processes) and by its live descendants (the Python daemon and
+    workers, each with its reaped children), from /proc/<pid>/stat."""
+    tick = os.sysconf("SC_CLK_TCK")
+    procs = {}
+    for entry in os.listdir("/proc"):
+        if entry.isdigit():
+            try:
+                with open(f"/proc/{entry}/stat", encoding="utf-8") as f:
+                    # after the ")" closing the command: state, ppid, ...;
+                    # utime, stime, cutime, cstime are fields 11 to 14
+                    fields = f.read().rsplit(")", 1)[1].split()
+            except OSError:
+                continue
+            procs[int(entry)] = (int(fields[1]), sum(map(int, fields[11:15])) / tick)
+    children: dict[int, list[int]] = {}
+    for pid, (ppid, _) in procs.items():
+        children.setdefault(ppid, []).append(pid)
+    python, todo = 0.0, list(children.get(jvm_pid, []))
+    while todo:
+        pid = todo.pop()
+        python += procs[pid][1]
+        todo.extend(children.get(pid, []))
+    return procs[jvm_pid][1], python
+
+
 def run_job_cost(reps: int) -> dict:
     """run_job's per-batch cost in one warmed local[4] session, per
     case: ingest-shaped flat batches into a new table (fresh) and into
     a table holding the earlier batches (resumed, 10% replays), and the
     4,000-doc skewed corpus into a new table. Each wall times the input
-    read plus run_job; Spark jobs and SQL executions are counted per
-    run_job."""
+    read plus run_job; Spark jobs, SQL executions, and the CPU-s of the
+    JVM and of its Python workers are counted per run_job."""
     import itertools
     import shutil
     import statistics
@@ -150,7 +177,8 @@ def run_job_cost(reps: int) -> dict:
     corpus = os.path.join(work, "extract.parquet")
     job.docs_df_from_corpus(spark, synth.gen_corpus(4000, seed=7, skew=True)) \
         .write.parquet(corpus)
-    cases: dict[str, dict] = {c: {"walls": [], "jobs": 0, "sql": 0}
+    jvm_pid = sc._jvm.java.lang.ProcessHandle.current().pid()
+    cases: dict[str, dict] = {c: {"walls": [], "jobs": 0, "sql": 0, "jvm": 0.0, "py": 0.0}
                               for c in ("ingest_fresh", "ingest_resumed", "extract_skewed")}
     groups = itertools.count()
 
@@ -158,15 +186,19 @@ def run_job_cost(reps: int) -> dict:
         group = f"run-job-{next(groups)}"
         sc.setJobGroup(group, group)
         sql0 = sql_store.executionsCount()
+        cpu0 = _tree_cpu_s(jvm_pid)
         t0 = time.perf_counter()
         job.run_job(spark, docs(), table)
         wall = time.perf_counter() - t0
+        cpu1 = _tree_cpu_s(jvm_pid)
         sc.setLocalProperty("spark.jobGroup.id", None)
         if rep >= 0:
             c = cases[case]
             c["walls"].append(wall)
             c["jobs"] += len(sc.statusTracker().getJobIdsForGroup(group))
             c["sql"] += sql_store.executionsCount() - sql0
+            c["jvm"] += cpu1[0] - cpu0[0]
+            c["py"] += cpu1[1] - cpu0[1]
 
     for rep in range(-3, reps):     # three warm-up rounds
         table = os.path.join(work, f"ingest-{rep}")
@@ -181,6 +213,8 @@ def run_job_cost(reps: int) -> dict:
                    "min_s": round(min(c["walls"]), 4),
                    "jobs_per_run_job": c["jobs"] / len(c["walls"]),
                    "sql_per_run_job": c["sql"] / len(c["walls"]),
+                   "jvm_cpu_s_per_run_job": round(c["jvm"] / len(c["walls"]), 4),
+                   "python_cpu_s_per_run_job": round(c["py"] / len(c["walls"]), 4),
                    "run_jobs": len(c["walls"])}
             for case, c in cases.items()}
 
@@ -200,7 +234,8 @@ def main() -> int:
                     help="time run_job in one warmed local[4] session on "
                          "fresh and resumed ingest-shaped flat batches and "
                          "on the 4,000-doc skewed corpus: median and min "
-                         "wall, Spark jobs and SQL executions per run_job")
+                         "wall, Spark jobs, SQL executions, and JVM and "
+                         "Python-worker CPU-s per run_job")
     ap.add_argument("--reps", type=int,
                     default=int(os.environ.get("BENCH_EXTRA_REPS", "3")))
     args = ap.parse_args()

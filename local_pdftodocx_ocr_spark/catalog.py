@@ -122,7 +122,8 @@ class SnapshotTable:
             return None
         return _read_parquet(spark, paths, schema)
 
-    def read_at(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
+    def read_at(self, spark: SparkSession, snapshot_id: str,
+                schema: StructType | None = None) -> DataFrame:
         """Time travel: the table AS OF `snapshot_id` — the union of all
         snapshots committed up to and including it (Iceberg's
         VERSION AS OF). Raises KeyError for unknown ids (e.g. an id
@@ -131,7 +132,7 @@ class SnapshotTable:
         for s in self.snapshots():
             paths.append(s["path"])
             if s["id"] == snapshot_id:
-                return spark.read.parquet(*paths)
+                return _read_parquet(spark, paths, schema)
         raise KeyError(f"unknown snapshot {snapshot_id!r}")
 
     def committed_doc_ids(self, spark: SparkSession,
@@ -279,7 +280,8 @@ class IcebergTable:
             return None
         return (spark or self.spark).table(self.identifier)
 
-    def read_at(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
+    def read_at(self, spark: SparkSession, snapshot_id: str,
+                schema: StructType | None = None) -> DataFrame:
         for s in self.snapshots():
             if s["id"] == snapshot_id:
                 return ((spark or self.spark).read

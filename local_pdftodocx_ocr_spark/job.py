@@ -21,11 +21,16 @@ Physical plan (designed for 1000 executors / 100 TB; tested on local[N]):
                                                 one batched recognize call
                                                 per record batch, plus one
                                                 lineage row per partition
-  write parquet snapshot -> atomic commit    -- idempotent restart point;
-                                                each lineage row's totals
-                                                also go to a per-run
-                                                accumulator, which run_job
-                                                returns: no read-back job
+    -> write its own part file               -- each task streams its rows,
+                                                lineage row included, into
+                                                one parquet file (pyarrow)
+                                                and yields a commit message:
+                                                lineage fields + file path
+  collect messages -> atomic commit          -- the driver moves exactly the
+                                                reported files into the
+                                                snapshot and commits it: the
+                                                idempotent restart point; no
+                                                Spark write job, no read-back
 
 No per-row Python anywhere: documents cross the Python boundary once, as
 Arrow record batches, and come back as record batches built directly
@@ -36,13 +41,13 @@ JVM-side.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from collections.abc import Iterator
-from functools import partial
 
 import pyarrow as pa
-from pyspark import Accumulator, AccumulatorParam, TaskContext
-from pyspark.accumulators import _accumulatorRegistry
+import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -55,6 +60,12 @@ from .schema import DOCS_SCHEMA, UNIFIED_SCHEMA
 DEFAULT_SALT = 0x5CA1AB1E
 _UNIFIED_ARROW = to_arrow_schema(UNIFIED_SCHEMA)
 _DOCS_ARROW = to_arrow_schema(DOCS_SCHEMA)
+# one task attempt's commit message: its lineage row plus its part file
+_COMMIT_SCHEMA = T.StructType(
+    [UNIFIED_SCHEMA[name] for name in
+     ("partition_id", "docs_in", "docs_out", "checksum", "wall_ms")]
+    + [T.StructField("path", T.StringType())])
+_COMMIT_ARROW = to_arrow_schema(_COMMIT_SCHEMA)
 
 
 def build_session(parallelism: int = 0, app: str = "pdf2spans",
@@ -100,27 +111,14 @@ def _recognized(spans_col: list) -> dict[str, str]:
     return dict(zip(refs, kernels.recognize_batch(refs)))
 
 
-class _TotalsParam(AccumulatorParam):
-    """``(docs_in, docs_out, checksum, partitions)``: counts add, the
-    checksum folds as kernels.combine_checksums does."""
-
-    def zero(self, value):
-        return (0, 0, 0, 0)
-
-    def addInPlace(self, a, b):
-        return (a[0] + b[0], a[1] + b[1], (a[2] + b[2]) % kernels._CHECK_MOD,
-                a[3] + b[3])
-
-
-def _unified_rows(results: Iterator[list[tuple]], partition_offset: int = 0,
-                  totals: Accumulator | None = None) -> Iterator[pa.RecordBatch]:
+def _unified_rows(results: Iterator[list[tuple]],
+                  partition_offset: int = 0) -> Iterator[pa.RecordBatch]:
     """The one emitter of unified rows. `results` yields, per input
     batch, a list of ``(doc_id, spans, checksum)``. A doc with spans
     becomes a doc row; a doc whose extraction came out empty becomes a
     quarantine row (null spans), which marks it processed so resume
     skips it without polluting the spans table. After the partition
-    drains, exactly one lineage row follows, and its totals are added
-    to `totals`."""
+    drains, exactly one lineage row follows."""
     ctx = TaskContext.get()
     partition_id = (ctx.partitionId() if ctx is not None else -1) + partition_offset
     t0 = time.monotonic()
@@ -136,12 +134,26 @@ def _unified_rows(results: Iterator[list[tuple]], partition_offset: int = 0,
             row_type=["doc" if spans else "quarantine" for _, spans, _ in rows],
             doc_id=[doc_id for doc_id, _, _ in rows],
             spans=[spans or None for _, spans, _ in rows])
-    if totals is not None:
-        totals.add((docs_in, docs_out, acc, 1))
     yield _record_batch(
         _UNIFIED_ARROW, row_type=["lineage"], partition_id=[partition_id],
         docs_in=[docs_in], docs_out=[docs_out], checksum=[format(acc, "016x")],
         wall_ms=[int((time.monotonic() - t0) * 1000)])
+
+
+def _written(batches: Iterator[pa.RecordBatch], staging: str) -> Iterator[pa.RecordBatch]:
+    """Streams unified `batches` into ``<staging>/_attempts/<task
+    attempt id>/part.parquet`` and yields the commit message: the
+    fields of the last batch (the lineage row) plus the file's path.
+    Readers skip the ``_``-prefixed directory; only run_job's commit
+    moves a file out."""
+    path = os.path.join(staging, "_attempts", str(TaskContext.get().taskAttemptId()),
+                        "part.parquet")
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with pq.ParquetWriter(path, _UNIFIED_ARROW, compression="snappy") as writer:
+        for batch in batches:
+            writer.write_batch(batch)
+    yield _record_batch(_COMMIT_ARROW, path=[path], **{
+        name: batch.column(name).to_pylist() for name in _COMMIT_ARROW.names[:-1]})
 
 
 def _spans_column(batch: pa.RecordBatch) -> list[list[dict]]:
@@ -154,8 +166,17 @@ def _spans_column(batch: pa.RecordBatch) -> list[list[dict]]:
             zip(batch.column("flat_id").to_pylist(), batch.column("text").to_pylist())]
 
 
-def extract_batch(batches: Iterator[pa.RecordBatch],
-                  totals: Accumulator | None = None) -> Iterator[pa.RecordBatch]:
+def _unified_map(df: DataFrame, body, staging: str | None) -> DataFrame:
+    """``df.mapInArrow(body)``, `body` emitting unified rows; given a
+    `staging` dir, each task writes them to its own part file instead
+    and the frame holds one commit message per task (_written)."""
+    if staging is None:
+        return df.mapInArrow(body, schema=UNIFIED_SCHEMA)
+    return df.mapInArrow(lambda batches: _written(body(batches), staging),
+                         schema=_COMMIT_SCHEMA)
+
+
+def extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow body. Per record batch: the spans (read, or
     synthesized from flat rows), one batched recognize call, then the
     per-document kernel pipeline. After the partition drains, exactly
@@ -171,14 +192,14 @@ def extract_batch(batches: Iterator[pa.RecordBatch],
                              kernels.doc_checksum(doc_id, tuples) if tuples else 0))
             yield rows
 
-    return _unified_rows(results(), totals=totals)
+    return _unified_rows(results())
 
 
 def extract_spans(docs: DataFrame, num_partitions: int | None = None,
-                  salt: int = DEFAULT_SALT,
-                  totals: Accumulator | None = None) -> DataFrame:
-    """docs (doc_id, spans) -> unified (doc rows + lineage rows);
-    `totals` accumulates the lineage rows' totals.
+                  salt: int = DEFAULT_SALT, staging: str | None = None) -> DataFrame:
+    """docs (doc_id, spans) -> unified (doc rows + lineage rows); with
+    a `staging` dir, each task writes its unified rows there and the
+    frame holds one commit message per task instead (_COMMIT_SCHEMA).
 
     The explicit ``repartition(P, xxhash64(doc_id, salt))`` is the north
     rule's skew defuse: doc_id ranges that hash hot (e.g. crawl shards
@@ -186,8 +207,7 @@ def extract_spans(docs: DataFrame, num_partitions: int | None = None,
     post-shuffle partitions."""
     n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
     salted = docs.repartition(n, F.xxhash64(F.col("doc_id"), F.lit(salt)))
-    return salted.mapInArrow(partial(extract_batch, totals=totals),
-                             schema=UNIFIED_SCHEMA)
+    return _unified_map(salted, extract_batch, staging)
 
 
 # ---------------------------------------------------------------------------
@@ -239,16 +259,15 @@ def _finalize_group(table: pa.Table) -> pa.Table:
         _FINALIZED_ARROW, doc_id=[doc_id], spans=[tuples or None], checksum=[chk])])
 
 
-def _finalized_to_unified(batches: Iterator[pa.RecordBatch],
-                          totals: Accumulator | None = None) -> Iterator[pa.RecordBatch]:
+def _finalized_to_unified(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     return _unified_rows(
         (list(zip(b.column("doc_id").to_pylist(), b.column("spans").to_pylist(),
                   b.column("checksum").to_pylist())) for b in batches),
-        _CHUNK_PARTITION_OFFSET, totals)
+        _CHUNK_PARTITION_OFFSET)
 
 
 def extract_spans_chunked(fat_docs: DataFrame, chunk_threshold: int,
-                          totals: Accumulator | None = None) -> DataFrame:
+                          staging: str | None = None) -> DataFrame:
     """(doc_id, spans) of oversized docs -> unified rows via the
     chunked two-phase plan: explode to span-chunks (pure JVM slice) ->
     route per chunk (mapInArrow) -> groupBy(doc_id) finalize
@@ -266,22 +285,22 @@ def extract_spans_chunked(fat_docs: DataFrame, chunk_threshold: int,
     routed = chunks.mapInArrow(_route_chunks, schema=_ROUTED_SCHEMA)
     finalized = routed.groupBy("doc_id").applyInArrow(
         _finalize_group, schema=_FINALIZED_SCHEMA)
-    return finalized.mapInArrow(partial(_finalized_to_unified, totals=totals),
-                                schema=UNIFIED_SCHEMA)
+    return _unified_map(finalized, _finalized_to_unified, staging)
 
 
 def extract_spans_auto(docs: DataFrame, num_partitions: int | None = None,
                        salt: int = DEFAULT_SALT,
                        chunk_threshold: int = 4096,
-                       totals: Accumulator | None = None) -> DataFrame:
+                       staging: str | None = None) -> DataFrame:
     """Skew-complete extraction: normal docs through the single-pass
     salted-repartition plan, oversized docs (> chunk_threshold spans)
-    through the chunked two-phase plan; one unified output."""
+    through the chunked two-phase plan; one unified output (or, with
+    a `staging` dir, one frame of commit messages)."""
     sized = materialize_spans(docs).withColumn("_n", F.size("spans"))
     small = sized.filter(F.col("_n") <= chunk_threshold).drop("_n")
     fat = sized.filter(F.col("_n") > chunk_threshold).drop("_n")
-    return extract_spans(small, num_partitions, salt, totals).unionByName(
-        extract_spans_chunked(fat, chunk_threshold, totals))
+    return extract_spans(small, num_partitions, salt, staging).unionByName(
+        extract_spans_chunked(fat, chunk_threshold, staging))
 
 
 def split_unified(unified: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -310,11 +329,15 @@ def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
     A `detections` side table is merged (inject_external_detections)
     after the anti-join, so replayed docs skip the merge.
 
-    Returns the run's totals, as its committed lineage rows sum them:
-    every lineage row also adds its totals to a per-run accumulator,
-    which the write's result stage merges once per partition (failed
-    attempts are dropped), so no read-back job is needed. The write and
-    commit jobs are described as ``run_job <snapshot id>: write`` and
+    The extraction tasks write the snapshot's files themselves: each
+    task attempt writes its own part file under the staging dir and
+    reports it in a commit message. The driver collects one message
+    per partition, each from the attempt that succeeded, moves exactly
+    those files to ``part-<partition_id>.parquet`` and commits; files
+    of failed or speculative attempts stay under ``_attempts``, which
+    the commit removes. Returns the run's totals, the sums of the
+    messages' lineage fields. The collect is described as
+    ``run_job <snapshot id>: write``, any job of the commit as
     ``...: commit``."""
     table = open_table(spark, out_root)
     if resume:
@@ -325,30 +348,34 @@ def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
         docs = inject_external_detections(docs, detections)
 
     snap_id, staging = table.begin()
-    sc = spark.sparkContext
-    totals = sc.accumulator((0, 0, 0, 0), _TotalsParam())
     if chunk_threshold:
-        unified = extract_spans_auto(docs, num_partitions=num_partitions,
-                                     chunk_threshold=chunk_threshold, totals=totals)
+        parts = extract_spans_auto(docs, num_partitions=num_partitions,
+                                   chunk_threshold=chunk_threshold, staging=staging)
     else:
-        unified = extract_spans(docs, num_partitions=num_partitions, totals=totals)
+        parts = extract_spans(docs, num_partitions=num_partitions, staging=staging)
+    sc = spark.sparkContext
     caller = sc.getLocalProperty("spark.job.description")
     try:
         sc.setJobDescription(f"run_job {snap_id}: write")
         try:
-            unified.write.mode("overwrite").parquet(staging)
+            messages = parts.collect()
         except Exception:
             table.abort(staging)
             raise
-        finally:   # PySpark keeps every registered accumulator otherwise
-            _accumulatorRegistry.pop(totals.aid, None)
         sc.setJobDescription(f"run_job {snap_id}: commit")
+        if not messages:    # as Spark's writer does: keep an empty snapshot's schema
+            os.makedirs(staging, exist_ok=True)
+            pq.write_table(_UNIFIED_ARROW.empty_table(), os.path.join(staging, "part-0.parquet"))
+        for m in messages:
+            os.replace(m["path"], os.path.join(staging, f"part-{m['partition_id']}.parquet"))
+        shutil.rmtree(os.path.join(staging, "_attempts"), ignore_errors=True)
         table.commit(snap_id, staging, meta={"kind": "extract"})
     finally:
         sc.setLocalProperty("spark.job.description", caller)
-    docs_in, docs_out, checksum, partitions = totals.value
-    return {"snapshot": snap_id, "docs_in": docs_in, "docs_out": docs_out,
-            "partitions": partitions, "checksum": format(checksum, "016x")}
+    return {"snapshot": snap_id, "docs_in": sum(m["docs_in"] for m in messages),
+            "docs_out": sum(m["docs_out"] for m in messages),
+            "partitions": len(messages),
+            "checksum": kernels.combine_checksums(int(m["checksum"], 16) for m in messages)}
 
 
 def read_extracted(spark: SparkSession, out_root: str) -> DataFrame:

@@ -1,16 +1,18 @@
 """The extraction job's Python boundary and its fixed per-run cost.
 
-Pins four things: a document whose extraction comes out empty is
+Pins five things: a document whose extraction comes out empty is
 committed as a quarantine row on both execution paths; no extraction
 plan crosses into Python through pandas, and a flat batch crosses once,
 after its resume anti-join, also with a detections merge; the JVM-side
-flat id equals the Python ``doc-%08d`` form; and ``run_job`` launches no
-more Spark jobs than its write needs: the lineage totals come from the
-extraction pass, not from a read-back.
+flat id equals the Python ``doc-%08d`` form; ``run_job`` launches no
+more Spark jobs than its extraction pass needs: the lineage totals come
+from that pass, not from a read-back; and no ``run_job`` plan holds
+Spark's file write: the extraction tasks write the snapshot's parts.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -76,6 +78,12 @@ def _python_nodes(plan: str) -> list[str]:
     return re.findall(r"\b(\w*(?:InArrow|InPandas|EvalPython\w*))\b ", plan)
 
 
+def _final_plan(df) -> str:
+    """The plan run_job executed for `df`: an adaptive plan that has
+    run prints its final plan, then its initial one; keep the final."""
+    return executed_plan(df).split("+- == Initial Plan ==")[0]
+
+
 def test_resumed_flat_run_job_crosses_into_python_once(spark, tmp_path, monkeypatch):
     """A resumed flat batch: replayed rows are anti-joined as flat rows
     below the salted exchange, and the one Python node above it both
@@ -95,7 +103,7 @@ def test_resumed_flat_run_job_crosses_into_python_once(spark, tmp_path, monkeypa
     stats = job.run_job(spark, job.interleaved_docs_from_flat(flat), out, num_partitions=2)
     assert stats["docs_in"] == len(FLAT_DOCS) - 10
 
-    plan = executed_plan(planned[0])
+    plan = _final_plan(planned[0])
     assert _python_nodes(plan) == ["MapInArrow"], plan
     lines = plan.splitlines()
     exchange = next(i for i, line in enumerate(lines) if "Exchange hashpartitioning(xxhash64" in line)
@@ -113,7 +121,7 @@ def test_resumed_flat_run_job_crosses_into_python_once(spark, tmp_path, monkeypa
     for docs in (flat.limit(10), flat):
         job.run_job(spark, job.interleaved_docs_from_flat(docs), str(tmp_path / "dets"),
                     num_partitions=2, detections=dets)
-    lines = executed_plan(planned[1]).splitlines()
+    lines = _final_plan(planned[1]).splitlines()
     anti = next(i for i, line in enumerate(lines) if "LeftAnti" in line)
     assert _python_nodes("\n".join(lines[anti:])) == [], lines
 
@@ -174,8 +182,8 @@ def _jobs_launched(spark, group: str, fn) -> int:
 
 
 def test_run_job_spark_job_count(spark, tmp_path):
-    """Fresh table: the write's shuffle and write jobs; the chunked
-    plan's second shuffle adds one. Resumed: broadcasting the committed
+    """Fresh table: the salted shuffle and the extraction pass, which
+    writes the parts; the chunked plan's second shuffle adds one. Resumed: broadcasting the committed
     ids for the anti-join adds one. No snapshot read may infer its
     schema, and the lineage totals launch no job."""
     corpus = synth.gen_corpus(20)
@@ -190,3 +198,41 @@ def test_run_job_spark_job_count(spark, tmp_path):
         tag = f"run_job-{chunk_threshold}"
         assert _jobs_launched(spark, f"{tag}-fresh", run(corpus[:10])) <= fresh
         assert _jobs_launched(spark, f"{tag}-resumed", run(corpus)) <= resumed
+
+
+def _sql_plans_since(spark, last_id: int) -> list[str]:
+    """Physical plans of the SQL executions with an id above `last_id`."""
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(executions.size() - 1, -1, -1):
+        execution = executions.apply(i)
+        if execution.executionId() <= last_id:
+            break
+        plans.append(execution.physicalPlanDescription())
+    return plans
+
+
+def _last_sql_id(spark) -> int:
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return executions.apply(executions.size() - 1).executionId() if executions.size() else -1
+
+
+def test_run_job_plans_no_spark_write(spark, tmp_path):
+    """Fresh and resumed, single-pass and chunked: no SQL execution of
+    a run_job holds Spark's write command, and a committed snapshot
+    holds only the part files the extraction tasks reported."""
+    corpus = synth.gen_corpus(12)
+    for chunk_threshold in (None, 5):
+        out = str(tmp_path / f"nowrite-{chunk_threshold}")
+        for docs in (corpus[:6], corpus):
+            last = _last_sql_id(spark)
+            stats = job.run_job(spark, job.docs_df_from_corpus(spark, docs), out,
+                                num_partitions=3, chunk_threshold=chunk_threshold)
+            plans = _sql_plans_since(spark, last)
+            assert plans and any("MapInArrow" in plan for plan in plans), plans
+            for plan in plans:
+                assert "InsertIntoHadoopFsRelationCommand" not in plan, plan
+                assert "WriteFiles" not in plan, plan
+            files = os.listdir(os.path.join(out, "snapshots", stats["snapshot"]))
+            assert len(files) == stats["partitions"]
+            assert all(re.fullmatch(r"part-\d+\.parquet", f) for f in files), files

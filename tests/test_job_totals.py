@@ -1,10 +1,13 @@
-"""run_job's returned totals come from the extraction pass itself.
+"""run_job's commit protocol: the extraction tasks write their own
+part files and report them in commit messages; the driver commits
+exactly the reported files and returns the messages' totals.
 
-Each lineage row's totals also go to a per-run accumulator. These tests
-pin that the returned dict equals the read-back of the committed
-lineage on every input path, that a failed and retried task is counted
-once, that PySpark's accumulator registry does not grow, and that
-the run's Spark jobs carry a description naming the snapshot.
+These tests pin that the returned dict equals the read-back of the
+committed lineage on every input path; that a file under ``_attempts``
+which no message reports is never committed or read; that a failed
+collect commits nothing and a rerun converges; that a failed and
+retried task is committed once, with no ``chmod`` forked on the way;
+and that the run's Spark jobs carry a description naming the snapshot.
 
 Run as a script (``python tests/test_job_totals.py OUT_DIR``), this
 file drives the retry case in a ``local[2,2]`` session of its own.
@@ -83,40 +86,108 @@ def test_returned_totals_equal_committed_lineage(spark, tmp_path, kind):
 
 
 def test_retried_task_is_counted_once(tmp_path):
-    """Partition 0's first attempt drains its extraction, then fails in
-    a stage-mate; the retry's totals alone count."""
+    """Partition 0's first attempt closes its part file and reports it,
+    then fails in a stage-mate; only the retry's file is committed.
+    A ``chmod`` on the session's ``PATH`` logs every fork of one; a
+    one-row Spark write after the run shows the log sees them."""
+    import shutil
+
     out = str(tmp_path / "retry")
+    shim = tmp_path / "shim"
+    shim.mkdir()
+    (shim / "chmod").write_text(
+        f'#!/bin/sh\necho "$@" >> {out}.chmod.log\nexec {shutil.which("chmod")} "$@"\n')
+    (shim / "chmod").chmod(0o755)
     proc = subprocess.run([sys.executable, os.path.abspath(__file__), out],
                           cwd=REPO, capture_output=True, text=True, timeout=600,
-                          env={**os.environ, "PYTHONPATH": REPO})
+                          env={**os.environ, "PYTHONPATH": REPO,
+                               "PATH": f"{shim}{os.pathsep}{os.environ['PATH']}"})
     assert proc.returncode == 0, proc.stderr[-3000:]
     got = json.loads(proc.stdout.strip().splitlines()[-1])
     assert got["failed_attempts"] == 1
     assert got["stats"] == got["read_back"]
-    want = oracle.expected_lineage_totals(synth.gen_corpus(24))
+    corpus = synth.gen_corpus(24)
+    want = oracle.expected_lineage_totals(corpus)
     assert {k: got["stats"][k] for k in want} == want
+    docs_out = sum(1 for doc_id, spans in corpus if kernels.extract_document(doc_id, spans))
+    assert got["doc_rows"] == got["distinct_doc_ids"] == docs_out
+    assert got["files"] == [f"part-{i}.parquet" for i in range(got["stats"]["partitions"])]
+    # the failed attempt had closed a readable part file, which is gone
+    assert [rows >= 1 and not left for rows, left in got["failed_files"]] == [True]
+    # the shim sees Spark's own writer fork chmod; run_job forks none
+    assert got["chmods"] == 0 < got["control_chmods"]
 
 
-def test_accumulator_registry_stays_bounded(spark, tmp_path, monkeypatch):
-    from pyspark.accumulators import _accumulatorRegistry
+def test_unreported_attempt_file_is_never_committed(spark, tmp_path, monkeypatch):
+    """A part file planted under ``_attempts`` before the collect, as a
+    failed or speculative attempt would leave it, is not committed, and
+    the snapshot directory holds only the reported parts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    docs = job.docs_df_from_corpus(spark, synth.gen_corpus(4))
-    out = str(tmp_path / "bounded")
-    before = len(_accumulatorRegistry)
-    for _ in range(20):
-        job.run_job(spark, docs, out, num_partitions=2)
-    assert len(_accumulatorRegistry) == before
+    from local_pdftodocx_ocr_spark.catalog import SnapshotTable
+
+    planted = job._record_batch(job._UNIFIED_ARROW, row_type=["doc"], doc_id=["doc-planted"])
+    begin = SnapshotTable.begin
+
+    def planting_begin(self):
+        snap_id, staging = begin(self)
+        os.makedirs(os.path.join(staging, "_attempts", "999999"))
+        pq.write_table(pa.Table.from_batches([planted]),
+                       os.path.join(staging, "_attempts", "999999", "part.parquet"))
+        return snap_id, staging
+
+    monkeypatch.setattr(SnapshotTable, "begin", planting_begin)
+    corpus = synth.gen_corpus(8)
+    out = str(tmp_path / "planted")
+    stats = job.run_job(spark, job.docs_df_from_corpus(spark, corpus), out, num_partitions=3)
+    assert stats == read_back(spark, out, stats["snapshot"])
+    assert {k: stats[k] for k in ("docs_in", "docs_out", "checksum")} == \
+        oracle.expected_lineage_totals(corpus)
+    snapshot_dir = os.path.join(out, "snapshots", stats["snapshot"])
+    assert sorted(os.listdir(snapshot_dir)) == [
+        f"part-{i}.parquet" for i in range(stats["partitions"])]
+    ids = [r["doc_id"] for r in open_table(spark, out).read(spark).collect()]
+    assert "doc-planted" not in ids
+
+
+def test_failed_collect_commits_nothing_and_rerun_converges(spark, tmp_path, monkeypatch):
+    docs = job.docs_df_from_corpus(spark, synth.gen_corpus(8))
+    out = str(tmp_path / "failed")
 
     def failing(batches):
         raise RuntimeError("injected write failure")
         yield  # pragma: no cover
 
     extract_spans = job.extract_spans
-    monkeypatch.setattr(job, "extract_spans", lambda *a, **k: extract_spans(
-        *a, **k).mapInArrow(failing, UNIFIED_SCHEMA))
-    with pytest.raises(Exception, match="injected write failure"):
-        job.run_job(spark, docs, str(tmp_path / "failed"), num_partitions=2)
-    assert len(_accumulatorRegistry) == before
+    with monkeypatch.context() as m:
+        m.setattr(job, "extract_spans", lambda *a, **k: extract_spans(
+            *a, **k).mapInArrow(failing, job._COMMIT_SCHEMA))
+        with pytest.raises(Exception, match="injected write failure"):
+            job.run_job(spark, docs, out, num_partitions=2)
+    table = open_table(spark, out)
+    assert table.snapshots() == [] and os.listdir(os.path.join(out, "snapshots")) == []
+    stats = job.run_job(spark, docs, out, num_partitions=2)
+    assert stats == read_back(spark, out, stats["snapshot"])
+    assert {k: stats[k] for k in ("docs_in", "docs_out", "checksum")} == \
+        oracle.expected_lineage_totals(synth.gen_corpus(8))
+    assert [s["id"] for s in table.snapshots()] == [stats["snapshot"]]
+
+
+def test_no_commit_message_still_commits_a_readable_snapshot(spark, tmp_path, monkeypatch):
+    """A collect with no message (adaptive execution can prune a fully
+    replayed plan to nothing) commits one empty part file, so the
+    snapshot keeps the table's schema for readers that infer it."""
+    extract_spans = job.extract_spans
+    monkeypatch.setattr(job, "extract_spans",
+                        lambda *a, **k: extract_spans(*a, **k).limit(0))
+    out = str(tmp_path / "empty")
+    stats = job.run_job(spark, job.docs_df_from_corpus(spark, synth.gen_corpus(3)), out,
+                        num_partitions=2)
+    assert stats == read_back(spark, out, stats["snapshot"])
+    assert stats["partitions"] == 0
+    df = open_table(spark, out).read(spark)
+    assert df.columns == UNIFIED_SCHEMA.names and df.count() == 0
 
 
 def test_run_job_describes_its_spark_jobs(spark, tmp_path):
@@ -136,20 +207,33 @@ def test_run_job_describes_its_spark_jobs(spark, tmp_path):
         f"run_job {stats['snapshot']}: write"}
 
 
+def _chmods(out: str) -> int:
+    try:
+        with open(out + ".chmod.log", encoding="utf-8") as f:
+            return len(f.readlines())
+    except FileNotFoundError:
+        return 0
+
+
 def _retry_main(out: str) -> None:
     """One run_job in a local[2,2] session (one retry allowed). A
     mapInArrow after the extraction, in the same stage, fails attempt 0
-    of partition 0 once its input has drained."""
+    of partition 0 once its commit message has passed."""
+    import pyarrow.parquet as pq
     from pyspark import TaskContext
     from pyspark.sql import SparkSession
 
     marker = out + ".failed"
 
     def fail_first_attempt(batches):
-        yield from batches
+        paths = []
+        for batch in batches:
+            paths += batch.column("path").to_pylist()
+            yield batch
         ctx = TaskContext.get()
         if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
-            open(marker, "a").close()
+            with open(marker, "w", encoding="utf-8") as f:
+                json.dump({path: pq.read_metadata(path).num_rows for path in paths}, f)
             raise RuntimeError("injected failure after draining")
 
     spark = (SparkSession.builder.master("local[2,2]").appName("retry")
@@ -158,11 +242,28 @@ def _retry_main(out: str) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     extract_spans = job.extract_spans
     job.extract_spans = lambda *a, **k: extract_spans(*a, **k).mapInArrow(
-        fail_first_attempt, UNIFIED_SCHEMA)
-    stats = job.run_job(spark, job.docs_df_from_corpus(spark, synth.gen_corpus(24)),
-                        out, num_partitions=2)
+        fail_first_attempt, job._COMMIT_SCHEMA)
+    docs = job.docs_df_from_corpus(spark, synth.gen_corpus(24))
+    chmods = _chmods(out)
+    stats = job.run_job(spark, docs, out, num_partitions=2)
+    chmods = _chmods(out) - chmods
+    control = _chmods(out)
+    spark.range(1).write.parquet(out + ".control")
+    control = _chmods(out) - control
+    rows = (open_table(spark, out).read(spark, UNIFIED_SCHEMA)
+            .filter(F.col("row_type") == "doc")
+            .agg(F.count("*").alias("n"), F.countDistinct("doc_id").alias("d")).first())
+    failed = {}
+    if os.path.exists(marker):
+        with open(marker, encoding="utf-8") as f:
+            failed = json.load(f)
     print(json.dumps({"stats": stats, "read_back": read_back(spark, out, stats["snapshot"]),
-                      "failed_attempts": int(os.path.exists(marker))}))
+                      "failed_attempts": int(os.path.exists(marker)),
+                      "failed_files": [(n, os.path.exists(p)) for p, n in failed.items()],
+                      "doc_rows": rows["n"], "distinct_doc_ids": rows["d"],
+                      "files": sorted(os.listdir(os.path.join(out, "snapshots",
+                                                              stats["snapshot"]))),
+                      "chmods": chmods, "control_chmods": control}))
     spark.stop()
 
 

@@ -122,8 +122,7 @@ class SnapshotTable:
             return None
         return _read_parquet(spark, paths, schema)
 
-    def read_at(self, spark: SparkSession, snapshot_id: str,
-                schema: StructType | None = None) -> DataFrame:
+    def read_at(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
         """Time travel: the table AS OF `snapshot_id` — the union of all
         snapshots committed up to and including it (Iceberg's
         VERSION AS OF). Raises KeyError for unknown ids (e.g. an id
@@ -132,7 +131,7 @@ class SnapshotTable:
         for s in self.snapshots():
             paths.append(s["path"])
             if s["id"] == snapshot_id:
-                return _read_parquet(spark, paths, schema)
+                return spark.read.parquet(*paths)
         raise KeyError(f"unknown snapshot {snapshot_id!r}")
 
     def committed_doc_ids(self, spark: SparkSession,
@@ -167,7 +166,11 @@ class IcebergTable:
     Mapping onto Iceberg:
 
     * begin()   -> a parquet staging dir (keeps the job's two-phase
-                   write API); nothing Iceberg-visible happens.
+                   write API); nothing Iceberg-visible happens. It is
+                   a local path that run_job's tasks write with
+                   pyarrow, so the driver and every executor must
+                   share it: one host, or a `staging_root` on a shared
+                   mount.
     * commit()  -> ONE atomic ``writeTo(...).append()`` of the staged
                    rows, labeled via a ``snapshot-property.*`` write
                    option so our snapshot ids survive in the Iceberg
@@ -280,8 +283,7 @@ class IcebergTable:
             return None
         return (spark or self.spark).table(self.identifier)
 
-    def read_at(self, spark: SparkSession, snapshot_id: str,
-                schema: StructType | None = None) -> DataFrame:
+    def read_at(self, spark: SparkSession, snapshot_id: str) -> DataFrame:
         for s in self.snapshots():
             if s["id"] == snapshot_id:
                 return ((spark or self.spark).read

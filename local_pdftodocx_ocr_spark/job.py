@@ -44,6 +44,7 @@ import os
 import shutil
 import time
 from collections.abc import Iterator
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -63,7 +64,7 @@ _DOCS_ARROW = to_arrow_schema(DOCS_SCHEMA)
 # one task attempt's commit message: its lineage row plus its part file
 _COMMIT_SCHEMA = T.StructType(
     [UNIFIED_SCHEMA[name] for name in
-     ("partition_id", "docs_in", "docs_out", "checksum", "wall_ms")]
+     ("partition_id", "docs_in", "docs_out", "checksum")]
     + [T.StructField("path", T.StringType())])
 _COMMIT_ARROW = to_arrow_schema(_COMMIT_SCHEMA)
 
@@ -154,6 +155,22 @@ def _written(batches: Iterator[pa.RecordBatch], staging: str) -> Iterator[pa.Rec
             writer.write_batch(batch)
     yield _record_batch(_COMMIT_ARROW, path=[path], **{
         name: batch.column(name).to_pylist() for name in _COMMIT_ARROW.names[:-1]})
+
+
+def _local_staging(spark: SparkSession, staging: str) -> str:
+    """`staging` as an absolute local path. The extraction tasks write
+    their parts there with pyarrow and the driver moves them with
+    os.replace, so it must be a POSIX path that the driver and every
+    executor see alike: one host, or a mount they all share. A path
+    that Spark's Hadoop file system would resolve elsewhere (a URI such
+    as ``hdfs://...``, or any path under a non-local ``fs.defaultFS``)
+    fails here, before any extraction work."""
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    if urlparse(staging).scheme or urlparse(default_fs or "file:///").scheme != "file":
+        raise ValueError(
+            f"run_job stages its part files on a local path that every executor "
+            f"shares; staging dir {staging!r} under fs.defaultFS {default_fs!r} is not one")
+    return os.path.abspath(staging)
 
 
 def _spans_column(batch: pa.RecordBatch) -> list[list[dict]]:
@@ -335,7 +352,10 @@ def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
     per partition, each from the attempt that succeeded, moves exactly
     those files to ``part-<partition_id>.parquet`` and commits; files
     of failed or speculative attempts stay under ``_attempts``, which
-    the commit removes. Returns the run's totals, the sums of the
+    the commit removes. The staging dir must therefore be a local path
+    that the driver and every executor share (_local_staging): one
+    host, or a shared mount; any other staging dir fails before the
+    extraction runs. Returns the run's totals, the sums of the
     messages' lineage fields. The collect is described as
     ``run_job <snapshot id>: write``, any job of the commit as
     ``...: commit``."""
@@ -348,6 +368,7 @@ def run_job(spark: SparkSession, docs: DataFrame, out_root: str,
         docs = inject_external_detections(docs, detections)
 
     snap_id, staging = table.begin()
+    staging = _local_staging(spark, staging)
     if chunk_threshold:
         parts = extract_spans_auto(docs, num_partitions=num_partitions,
                                    chunk_threshold=chunk_threshold, staging=staging)

@@ -339,29 +339,6 @@ def test_snapshot_time_travel(spark, tmp_path):
         table.read_at(spark, "snap-bogus")
 
 
-def test_read_at_with_schema_launches_no_job(spark, tmp_path):
-    """Given the table's schema, a time-travel read infers nothing."""
-    from local_pdftodocx_ocr_spark.catalog import SnapshotTable
-    from local_pdftodocx_ocr_spark.schema import UNIFIED_SCHEMA
-
-    out = str(tmp_path / "schema")
-    job.run_job(spark, job.docs_df_from_corpus(spark, synth.gen_corpus(4)), out,
-                num_partitions=2)
-    table = SnapshotTable(out)
-    snap = table.snapshots()[-1]["id"]
-    sc = spark.sparkContext
-    jobs = {}
-    for schema in (None, UNIFIED_SCHEMA):
-        group = f"read_at-{schema is not None}"
-        sc.setJobGroup(group, group)
-        try:
-            table.read_at(spark, snap, schema)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs[schema is not None] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs[False] >= 1 and jobs[True] == 0, jobs
-
-
 def test_snapshot_compaction(spark, tmp_path):
     """compact() folds all snapshots into one with identical content;
     resume stays a no-op afterwards."""

@@ -7,7 +7,9 @@ committed lineage on every input path; that a file under ``_attempts``
 which no message reports is never committed or read; that a failed
 collect commits nothing and a rerun converges; that a failed and
 retried task is committed once, with no ``chmod`` forked on the way;
-and that the run's Spark jobs carry a description naming the snapshot.
+that a staging dir Spark would resolve to another file system fails
+before any job; and that the run's Spark jobs carry a description
+naming the snapshot.
 
 Run as a script (``python tests/test_job_totals.py OUT_DIR``), this
 file drives the retry case in a ``local[2,2]`` session of its own.
@@ -85,15 +87,15 @@ def test_returned_totals_equal_committed_lineage(spark, tmp_path, kind):
         oracle.expected_lineage_totals(corpus)["checksum"]
 
 
-def test_retried_task_is_counted_once(tmp_path):
-    """Partition 0's first attempt closes its part file and reports it,
-    then fails in a stage-mate; only the retry's file is committed.
-    A ``chmod`` on the session's ``PATH`` logs every fork of one; a
-    one-row Spark write after the run shows the log sees them."""
+@pytest.fixture(scope="module")
+def retry_run(tmp_path_factory):
+    """The retry case's result, from a ``local[2,2]`` subprocess whose
+    ``PATH`` starts with a ``chmod`` that logs every fork of one."""
     import shutil
 
-    out = str(tmp_path / "retry")
-    shim = tmp_path / "shim"
+    tmp = tmp_path_factory.mktemp("retry")
+    out = str(tmp / "retry")
+    shim = tmp / "shim"
     shim.mkdir()
     (shim / "chmod").write_text(
         f'#!/bin/sh\necho "$@" >> {out}.chmod.log\nexec {shutil.which("chmod")} "$@"\n')
@@ -103,7 +105,13 @@ def test_retried_task_is_counted_once(tmp_path):
                           env={**os.environ, "PYTHONPATH": REPO,
                                "PATH": f"{shim}{os.pathsep}{os.environ['PATH']}"})
     assert proc.returncode == 0, proc.stderr[-3000:]
-    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_retried_task_is_counted_once(retry_run):
+    """Partition 0's first attempt closes its part file and reports it,
+    then fails in a stage-mate; only the retry's file is committed."""
+    got = retry_run
     assert got["failed_attempts"] == 1
     assert got["stats"] == got["read_back"]
     corpus = synth.gen_corpus(24)
@@ -114,8 +122,17 @@ def test_retried_task_is_counted_once(tmp_path):
     assert got["files"] == [f"part-{i}.parquet" for i in range(got["stats"]["partitions"])]
     # the failed attempt had closed a readable part file, which is gone
     assert [rows >= 1 and not left for rows, left in got["failed_files"]] == [True]
-    # the shim sees Spark's own writer fork chmod; run_job forks none
-    assert got["chmods"] == 0 < got["control_chmods"]
+
+
+def test_run_job_forks_no_chmod(retry_run):
+    """The one-row Spark write after the run is the shim's positive
+    control: Hadoop's local file system forks ``chmod`` where its
+    native library is missing. Where it loads, no write forks one, and
+    a count of 0 for run_job would show nothing."""
+    if not retry_run["control_chmods"]:
+        pytest.skip("Spark's own writer forks no chmod here (native Hadoop "
+                    "loaded), so the shim has no positive control")
+    assert retry_run["chmods"] == 0
 
 
 def test_unreported_attempt_file_is_never_committed(spark, tmp_path, monkeypatch):
@@ -172,6 +189,35 @@ def test_failed_collect_commits_nothing_and_rerun_converges(spark, tmp_path, mon
     assert {k: stats[k] for k in ("docs_in", "docs_out", "checksum")} == \
         oracle.expected_lineage_totals(synth.gen_corpus(8))
     assert [s["id"] for s in table.snapshots()] == [stats["snapshot"]]
+
+
+@pytest.mark.parametrize("where", ["staging_uri", "default_fs"])
+def test_non_local_staging_fails_before_extraction(spark, tmp_path, monkeypatch, where):
+    """The tasks write their parts with pyarrow and the driver moves
+    them with os.replace, so a staging dir that Spark would resolve to
+    another file system fails before any Spark job and commits nothing."""
+    from local_pdftodocx_ocr_spark.catalog import SnapshotTable
+
+    docs = job.docs_df_from_corpus(spark, synth.gen_corpus(4))
+    out = str(tmp_path / where)
+    sc = spark.sparkContext
+    hconf = sc._jsc.hadoopConfiguration()
+    default_fs = hconf.get("fs.defaultFS")
+    if where == "staging_uri":
+        monkeypatch.setattr(SnapshotTable, "begin", lambda self: (
+            "snap-000000-remote", "hdfs://localhost:1/staging/snap-000000-remote"))
+    else:
+        hconf.set("fs.defaultFS", "hdfs://localhost:1")
+    sc.setJobGroup("run_job-non-local", "non-local staging")
+    try:
+        with pytest.raises(ValueError, match="local path that every executor shares"):
+            job.run_job(spark, docs, out, resume=False, num_partitions=2)
+    finally:
+        hconf.set("fs.defaultFS", default_fs)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("run_job-non-local") == []
+    assert open_table(spark, out).snapshots() == []
 
 
 def test_no_commit_message_still_commits_a_readable_snapshot(spark, tmp_path, monkeypatch):
